@@ -1041,19 +1041,31 @@ def bpe_train(
 # screen (Rae et al. 2021 use {the, be, to, of, and, that, have, with}).
 GOPHER_STOPWORDS: Sequence[str] = ("the", "be", "to", "of", "and", "that", "have", "with")
 
+# The Gopher rule thresholds (Rae et al. 2021 §A1.1) — the defaults of
+# gopher_quality_flags and of the _screen_flags fusion.
+_GOPHER_THRESHOLDS = {
+    "min_words": 50,
+    "max_words": 100_000,
+    "min_mean_word_len": 3.0,
+    "max_mean_word_len": 10.0,
+    "max_symbol_word_ratio": 0.1,
+    "min_alpha_word_ratio": 0.8,
+    "min_stopword_hits": 2,
+}
+
 
 def gopher_quality_flags(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     *,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
-    min_alpha_word_ratio: float = 0.8,
-    min_stopword_hits: int = 2,
+    min_words: int = _GOPHER_THRESHOLDS["min_words"],
+    max_words: int = _GOPHER_THRESHOLDS["max_words"],
+    min_mean_word_len: float = _GOPHER_THRESHOLDS["min_mean_word_len"],
+    max_mean_word_len: float = _GOPHER_THRESHOLDS["max_mean_word_len"],
+    max_symbol_word_ratio: float = _GOPHER_THRESHOLDS["max_symbol_word_ratio"],
+    min_alpha_word_ratio: float = _GOPHER_THRESHOLDS["min_alpha_word_ratio"],
+    min_stopword_hits: int = _GOPHER_THRESHOLDS["min_stopword_hits"],
     stopwords: Sequence[str] = GOPHER_STOPWORDS,
     round_to: int = 4,
 ) -> DataFrame:
@@ -1237,9 +1249,9 @@ def frequent_terms(
 
     The pigeonhole bar needs the RUNTIME partition count P: a bar derived
     from an underestimate of P is too high and silently drops heavy
-    hitters. The count is NOT probed via ``df.rdd`` (the
-    ``sources/readers.py`` rule: under AQE that materializes query
-    stages); instead phase 1 emits one marker row per partition alongside
+    hitters. The count is NOT probed via ``df.rdd``: under AQE that
+    materializes the query stages, a full scan job per probe. Instead
+    phase 1 emits one marker row per partition alongside
     the candidates, the candidate set is checkpointed (it must
     materialize anyway for the broadcast), and the marker count is read
     off the tiny checkpointed frame. If the assumed P (defaultParallelism
@@ -2032,6 +2044,16 @@ def _flesch_count_exprs(text_col: str) -> "tuple[Column, Column, Column]":
     return words, sents, syll
 
 
+def _flesch_x1000(words: Column, sents: Column, syll: Column) -> Column:
+    """Module-private: the Flesch score over the three counts, floor-scaled
+    x1000 to a bigint — shared by :func:`flesch_reading_ease` and
+    :func:`_screen_flags`. Undefined (division by zero) for zero words;
+    both callers guard that case."""
+    w, s, y = (c.cast("double") for c in (words, sents, syll))
+    score = F.lit(206.835) - F.lit(1.015) * (w / s) - F.lit(84.6) * (y / w)
+    return F.floor(score * F.lit(1000.0)).cast("bigint")
+
+
 def flesch_reading_ease(
     df: DataFrame,
     text_col: str,
@@ -2067,14 +2089,9 @@ def flesch_reading_ease(
         sents.alias("n_sentences"),
         syll.alias("n_syllables"),
     ).filter(F.col("n_words") > 0)
-    w = F.col("n_words").cast("double")
-    s = F.col("n_sentences").cast("double")
-    y = F.col("n_syllables").cast("double")
-    score = (
-        F.lit(206.835) - F.lit(1.015) * (w / s) - F.lit(84.6) * (y / w)
-    )
     return base.withColumn(
-        "flesch_x1000", F.floor(score * F.lit(1000.0)).cast("bigint")
+        "flesch_x1000",
+        _flesch_x1000(F.col("n_words"), F.col("n_sentences"), F.col("n_syllables")),
     )
 
 
@@ -2083,8 +2100,8 @@ def _screen_flags(
     text_col: str = "text",
     id_col: str = "doc_id",
     *,
-    min_words: int = 50,
-    min_stopword_hits: int = 2,
+    min_words: int = _GOPHER_THRESHOLDS["min_words"],
+    min_stopword_hits: int = _GOPHER_THRESHOLDS["min_stopword_hits"],
     flesch_min_x1000: int = 50_000,
     entropy_min: Optional[float] = None,
 ) -> DataFrame:
@@ -2141,13 +2158,11 @@ def _screen_flags(
         )
     m = bound.select(*sel)
     fl = _gopher_flag_exprs(
-        min_words=min_words,
-        max_words=100_000,
-        min_mean_word_len=3.0,
-        max_mean_word_len=10.0,
-        max_symbol_word_ratio=0.1,
-        min_alpha_word_ratio=0.8,
-        min_stopword_hits=min_stopword_hits,
+        **{
+            **_GOPHER_THRESHOLDS,
+            "min_words": min_words,
+            "min_stopword_hits": min_stopword_hits,
+        }
     )
     passes = (
         fl["ok_words"]
@@ -2156,11 +2171,7 @@ def _screen_flags(
         & fl["ok_alpha_ratio"]
         & fl["ok_stopwords"]
     )
-    wd = F.col("__fw").cast("double")
-    sd = F.col("__fs").cast("double")
-    yd = F.col("__fy").cast("double")
-    score = F.lit(206.835) - F.lit(1.015) * (wd / sd) - F.lit(84.6) * (yd / wd)
-    fx1000 = F.floor(score * F.lit(1000.0)).cast("bigint")
+    fx1000 = _flesch_x1000(F.col("__fw"), F.col("__fs"), F.col("__fy"))
     out = [
         F.col(id_col),
         passes.alias("__a"),

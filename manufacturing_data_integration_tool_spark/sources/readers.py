@@ -36,6 +36,17 @@ TABLE_NAMES = (
 
 FILE_SOURCE_COL = "FileSource"
 
+
+def source_schema(config: IntegrationConfig) -> T.StructType:
+    """The pinned all-string schema of the config's declared source
+    columns — shared by every batch reader and the file stream."""
+    return T.StructType([T.StructField(c, T.StringType(), True) for c in config.source_columns])
+
+
+def _paths(path_or_glob: str | Sequence[str]) -> str | list[str]:
+    return list(path_or_glob) if isinstance(path_or_glob, (list, tuple)) else path_or_glob
+
+
 # Parquet files written with INT64 TIMESTAMP(NANOS) (e.g. pandas
 # ``timestamp[ns]``) are rejected by Spark's vectorized reader with
 # PARQUET_TYPE_ILLEGAL. The documented escape hatch is the legacy conf that
@@ -75,9 +86,8 @@ def read_source_csv(
         .option("mode", "PERMISSIVE")
     )
     if config:
-        schema = T.StructType([T.StructField(c, T.StringType(), True) for c in config.source_columns])
-        reader = reader.schema(schema)
-    df = reader.csv(list(path_or_glob) if isinstance(path_or_glob, (list, tuple)) else path_or_glob)
+        reader = reader.schema(source_schema(config))
+    df = reader.csv(_paths(path_or_glob))
     if with_lineage:
         df = df.withColumn(FILE_SOURCE_COL, F.input_file_name())
     return df
@@ -100,52 +110,10 @@ def read_source_jsonl(
     otherwise mirror the CSV source (PERMISSIVE, optional lineage)."""
     reader = spark.read.option("mode", "PERMISSIVE")
     if config:
-        schema = T.StructType(
-            [T.StructField(c, T.StringType(), True) for c in config.source_columns]
-        )
-        reader = reader.schema(schema)
-    df = reader.json(
-        list(path_or_glob)
-        if isinstance(path_or_glob, (list, tuple))
-        else path_or_glob
-    )
+        reader = reader.schema(source_schema(config))
+    df = reader.json(_paths(path_or_glob))
     if with_lineage:
         df = df.withColumn(FILE_SOURCE_COL, F.input_file_name())
-    return df
-
-
-# Tables whose downstream pipelines are CPU-heavy per row (tokenization,
-# hashing, vector math, rule compilation) — worth fanning out when the scan
-# itself can't parallelize (see _fan_out_small_scan).
-_FAN_OUT_TABLES = frozenset({"documents", "embeddings", "events", "orders", "lineitem"})
-
-
-def _fan_out_small_scan(
-    spark: SparkSession, df: DataFrame, name: str, path: str
-) -> DataFrame:
-    """Round-robin repartition a scan that cannot parallelize on its own.
-
-    A single-row-group parquet file is ONE input split, so every downstream
-    narrow expression — tokenize, md5, shingling — runs on one core until
-    the first shuffle. This fires only in that small-data regime, decided
-    from driver-side file metadata (a local single-file table smaller than
-    one input split). NEVER probe ``df.rdd`` for this: under AQE that
-    materializes the query stages — a full scan job per ``read_table``
-    call (measured: it doubled bench cold times). At production scale the
-    table is a directory of many files, the condition is false, and no
-    extra shuffle is introduced. Filters and column pruning push through
-    Repartition, so scan pushdown is unaffected.
-    """
-    if name not in _FAN_OUT_TABLES:
-        return df
-    try:
-        import os
-
-        single_split = os.path.isfile(path) and os.path.getsize(path) < (128 << 20)
-    except OSError:
-        single_split = False
-    if single_split:
-        return df.repartition(spark.sparkContext.defaultParallelism)
     return df
 
 
@@ -180,9 +148,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         elif ts_type == "timestamp":
             df = df.withColumn("ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000))
-        return _fan_out_small_scan(spark, df, name, f"{sf_dir}/{name}.parquet")
-    path = f"{sf_dir}/{name}.parquet"
-    return _fan_out_small_scan(spark, spark.read.parquet(path), name, path)
+        return df
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def read_tables(spark: SparkSession, sf_dir: str, names: Sequence[str] = TABLE_NAMES) -> dict[str, DataFrame]:
@@ -285,12 +252,7 @@ def read_source_fixed_width(
     reader (same partitioning/pushdown behavior); the substrings are
     pure column expressions — zero UDF, zero shuffle.
     """
-    paths = (
-        list(path_or_glob)
-        if isinstance(path_or_glob, (list, tuple))
-        else path_or_glob
-    )
-    df = spark.read.text(paths)
+    df = spark.read.text(_paths(path_or_glob))
     cols = [
         F.nullif(
             F.trim(F.substring(F.col("value"), start, width)), F.lit("")
@@ -320,16 +282,8 @@ def read_source_xml(
     """
     reader = spark.read.format("xml").option("rowTag", row_tag)
     if config:
-        schema = T.StructType(
-            [T.StructField(c, T.StringType(), True) for c in config.source_columns]
-        )
-        reader = reader.schema(schema)
-    paths = (
-        list(path_or_glob)
-        if isinstance(path_or_glob, (list, tuple))
-        else path_or_glob
-    )
-    df = reader.load(paths)
+        reader = reader.schema(source_schema(config))
+    df = reader.load(_paths(path_or_glob))
     if with_lineage:
         df = df.withColumn(FILE_SOURCE_COL, F.input_file_name())
     return df
@@ -356,12 +310,7 @@ def read_source_orc(
     semantics (NUMERIC-on-cast-failure etc.) byte-identical across
     formats.
     """
-    paths = (
-        list(path_or_glob)
-        if isinstance(path_or_glob, (list, tuple))
-        else path_or_glob
-    )
-    df = spark.read.orc(paths)
+    df = spark.read.orc(_paths(path_or_glob))
     if config:
         present = set(df.columns)
         cols = [

@@ -18,13 +18,13 @@ from __future__ import annotations
 from typing import Any, Callable, Mapping, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import IntegrationConfig
 from ..pipeline import project_to_target
 from ..plans.validator import validate
 from ..sources.archive import archive_file
+from ..sources.readers import FILE_SOURCE_COL, source_schema
 from ..sources.sinks import shape_errors_for_sink
 
 
@@ -63,15 +63,14 @@ def start_file_stream(
     inbox drains over several batches instead of one unbounded batch.
     Pass ``None`` to remove the bound.
     """
-    schema = T.StructType([T.StructField(c, T.StringType(), True) for c in config.source_columns])
     reader = (
         spark.readStream.option("header", config.source.has_header)
         .option("sep", config.source.delimiter)
-        .schema(schema)
+        .schema(source_schema(config))
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.csv(input_dir).withColumn("FileSource", F.input_file_name())
+    stream = reader.csv(input_dir).withColumn(FILE_SOURCE_COL, F.input_file_name())
 
     # NOTE we archive explicitly per micro-batch rather than via
     # ``cleanSource='archive'``: Spark's source cleaner only runs at the
@@ -92,7 +91,7 @@ def start_file_stream(
             if archive_dir:
                 files = [
                     r[0]
-                    for r in annotated.select("FileSource").distinct().collect()
+                    for r in annotated.select(FILE_SOURCE_COL).distinct().collect()
                     if r[0]
                 ]
                 for uri in sorted(files):

@@ -500,11 +500,13 @@ def test_q148_packing_window_is_sub_bucketed(spark):
 
 
 def test_gopher_and_entropy_plans_have_no_exchange(spark):
-    """q150/q151 claim zero shuffle — no hash/range repartitioning and no
-    Python eval may appear (the only allowed Exchange is read_table's
-    RoundRobin fan-out of the single small test file)."""
+    """q150/q151 claim zero shuffle — no Exchange of any kind and no
+    Python eval may appear."""
+    import re
+
     for q in (entry.q150_gopher_quality, entry.q151_char_entropy):
         plan = plan_of(q(spark, "/root/testdata/sf0.001"))
+        assert not re.search(r"^\(\d+\) Exchange", plan, re.M), plan
         assert "hashpartitioning" not in plan, plan
         assert "rangepartitioning" not in plan, plan
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -549,16 +551,13 @@ def test_q157_bm25_topk_is_take_ordered(spark):
 
 def test_q158_c4_and_q159_encoding_have_no_exchange(spark):
     """Line filtering and the encoding screen are per-row HOF folds — any
-    hash/single-partition Exchange means a shuffle snuck into a
-    scan-speed op (the reader's round-robin fan-out of a single parquet
-    file is the one allowed Exchange)."""
+    Exchange means a shuffle snuck into a scan-speed op."""
     for q in (entry.q158_c4_line_filter, entry.q159_encoding_screen):
         plan = plan_of(q(spark, "/root/testdata/sf0.001"))
         n_exchange = plan.count("Arguments: ") and len(
             [l for l in plan.splitlines() if l.strip().startswith("(") and ") Exchange" in l]
         )
-        n_roundrobin = plan.count("RoundRobinPartitioning")
-        assert n_exchange == n_roundrobin, q.__name__
+        assert n_exchange == 0, q.__name__
         assert "hashpartitioning" not in plan and "SinglePartition" not in plan, q.__name__
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -1137,23 +1136,21 @@ def test_bmp_and_wav_decode_single_scan_arrow_no_shuffle(spark):
         plan = plan_of(fn(spark, "/root/testdata/sf0.001"))
         assert "MapInPandas" in plan
         assert "BatchEvalPython" not in plan
-        # the ONLY exchange is read_table's deliberate round-robin
-        # fan-out of the small scan (parallelism seeding) — never a
-        # hash shuffle: the decode is embarrassingly parallel
+        # no exchange at all: the decode is embarrassingly parallel
         exchanges = re.findall(
             r"^\(\d+\) Exchange\n(?:.*\n)*?Arguments: (\w+)",
             plan, re.M,
         )
-        assert all(kind.startswith("RoundRobin") for kind in exchanges), plan[:1500]
+        assert exchanges == [], plan[:1500]
         assert "hashpartitioning" not in plan
         assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1
 
 
 def test_png_decode_single_scan_arrow_no_shuffle(spark):
     """q393 (compressed image, zlib + filter reconstruction) keeps the
-    q386/q387 posture: one documents scan, back-to-back Arrow kernels,
-    round-robin fan-out only — deflate/inflate cost scales with the
-    partition count, no shuffle, no per-row Python."""
+    q386/q387 posture: one documents scan, back-to-back Arrow kernels —
+    deflate/inflate cost scales with the partition count, no shuffle, no
+    per-row Python."""
     import re
 
     plan = plan_of(entry.q393_png_decode(spark, "/root/testdata/sf0.001"))
@@ -1165,7 +1162,7 @@ def test_png_decode_single_scan_arrow_no_shuffle(spark):
 
 def test_avi_decode_single_scan_arrow_no_shuffle(spark):
     """q390 (video container) keeps the q386/q387 posture: one scan,
-    Arrow kernels, round-robin fan-out only."""
+    Arrow kernels, no shuffle."""
     import re
 
     plan = plan_of(entry.q390_avi_frames(spark, "/root/testdata/sf0.001"))
@@ -1207,6 +1204,38 @@ def test_q403_aqe_skew_join_splits_hot_partition(spark):
     assert "skewed" in plan  # AQEShuffleRead split of the hot partition
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_q403_confs_remote_path_keeps_spark_default(monkeypatch, tmp_path):
+    """A remote or missing sf_dir cannot be sized by a local stat: the
+    advisory size is Spark's 64 MB default, not the 4 KB floor, and a
+    remote path is never touched."""
+    from pathlib import Path
+
+    def no_io(*args, **kwargs):
+        raise AssertionError("local file I/O on a remote path")
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    with monkeypatch.context() as m:
+        for name in ("exists", "is_dir", "is_file", "stat", "rglob"):
+            m.setattr(Path, name, no_io)
+        for remote in ("s3a://bucket/sf", "hdfs://nn:8020/sf"):
+            assert entry._q403_confs(remote)[key] == str(64 * 1024 * 1024)
+    assert entry._q403_confs(str(tmp_path / "absent"))[key] == str(64 * 1024 * 1024)
+    local = int(entry._q403_confs("/root/testdata/sf0.001")[key])
+    assert 4096 <= local < 64 * 1024 * 1024
+
+
+def test_read_table_adds_no_exchange(spark):
+    """read_table returns the bare parquet scan: partitioning is left to
+    the operators downstream, whatever the table or its file layout."""
+    import re
+
+    from manufacturing_data_integration_tool_spark.sources.readers import read_table
+
+    for name in ("lineitem", "orders", "documents", "events", "embeddings"):
+        plan = plan_of(read_table(spark, "/root/testdata/sf0.001", name))
+        assert not re.search(r"^\(\d+\) Exchange", plan, re.M), (name, plan)
 
 
 def test_q406_bucket_pruning_reads_subset_of_buckets(spark):
