@@ -19,9 +19,10 @@ Scale notes (100 TB posture):
   the driver on the explicit small-graph fast path (union-find below
   ``driver_threshold`` edges, where one bounded collect beats the fixed
   point's per-round probe actions).
-* The per-round convergence check is a 1-row aggregate (count + xor of
-  ``xxhash64`` over edges) — a driver action per round is inherent to any
-  fixed-point algorithm; rounds are O(log^2 n) bounded.
+* The per-round convergence check is a 1-row aggregate — in CC a count +
+  xor of ``xxhash64`` over edges, in kcore the minimum of the degree table
+  it already builds — a driver action per round is inherent to any
+  fixed-point algorithm; CC rounds are O(log^2 n) bounded.
 * ``localCheckpoint`` truncates the iterative lineage so the plan does not
   grow with rounds (re-derivable state would otherwise recompute the whole
   chain each action).
@@ -447,10 +448,16 @@ def kcore(
     though it is iterative (rows-only correctness check; semantics pinned
     by the pure-Python twin in tests).
 
-    Per round: one degree groupBy + two anti-joins on the peeled-off node
+    Per round: one degree groupBy, probed by ONE 1-row action
+    (``min(core_degree)``), then two anti-joins on the peeled-off node
     set — all equi-joins on node ids; the edge set only shrinks. The
-    convergence probe is the same 1-row count/xor checksum the CC loop
-    uses; ``localCheckpoint`` truncates lineage per round.
+    deduped input is checkpointed before anything reads it, so the pair
+    pipeline upstream runs once; each peel is checkpointed to truncate
+    lineage. The degree table stays lazy: when its minimum is NULL (no
+    edges) or >= k it IS the k-core and is returned as is. Every peel
+    removes at least one edge and the fixed point is unique, so no
+    "nothing changed" round is needed to detect convergence.
+    ``max_iter`` bounds the number of peel rounds.
 
     Output: ``(node, core_degree)`` for nodes in the k-core, with their
     degree inside the core.
@@ -459,14 +466,20 @@ def kcore(
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
+        .transform(checkpoint_round)
     )
-    prev = _edge_checksum(edges)
-    converged = False
-    for _ in range(max_iter):
+    for peels in range(max_iter + 1):
         sym = edges.union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        deg = sym.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("core_degree")
+        )
+        low = deg.agg(F.min("core_degree")).collect()[0][0]
+        if low is None or low >= k:
+            return deg
+        if peels == max_iter:
+            break
         # r12 opt: drop edges touching the REMOVED nodes (deg < k) via
         # anti-joins instead of semi-joining against the survivors. Every
         # node incident to an edge appears in deg, so {removed} is the
@@ -475,32 +488,20 @@ def kcore(
         # peel-off (typically a sliver of the graph, trivially broadcast)
         # rather than the whole surviving node set, so the big edge side
         # needs no shuffle on rounds where AQE broadcasts the peel-off.
-        removed = deg.filter(F.col("deg") < k).select(F.col("src").alias("node"))
+        removed = deg.filter(F.col("core_degree") < k).select("node")
         edges = (
             edges.join(removed.withColumnRenamed("node", "src"), "src", "left_anti")
             .join(removed.withColumnRenamed("node", "dst"), "dst", "left_anti")
             .select("src", "dst")
             .transform(checkpoint_round)
         )
-        cur = _edge_checksum(edges)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        # exiting on max_iter without a fixed point would silently return a
-        # subgraph that still contains degree<k nodes — not a k-core.
-        # Pathological chain-heavy graphs can need >max_iter peel rounds;
-        # fail loudly rather than hand back a wrong answer.
-        raise RuntimeError(
-            f"kcore: peeling did not reach the fixed point in {max_iter} "
-            "rounds; raise max_iter"
-        )
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    return sym.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("core_degree")
+    # exiting on max_iter without a fixed point would silently return a
+    # subgraph that still contains degree<k nodes — not a k-core.
+    # Pathological chain-heavy graphs can need >max_iter peel rounds;
+    # fail loudly rather than hand back a wrong answer.
+    raise RuntimeError(
+        f"kcore: peeling did not reach the fixed point in {max_iter} "
+        "rounds; raise max_iter"
     )
 
 

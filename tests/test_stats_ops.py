@@ -311,6 +311,53 @@ def test_kcore_cascading_peel(spark):
     assert kcore(df, k=2).count() == 0
 
 
+def test_kcore_reads_its_input_once(spark):
+    from pyspark.sql.types import LongType
+
+    from manufacturing_data_integration_tool_spark.ops.graph import kcore
+
+    # K4 + pendant chain (8 edges, one peel round at k=3). Every row of the
+    # input passes through a nondeterministic UDF that counts its calls:
+    # the upstream pipeline must be evaluated once, not once per round.
+    edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)]
+    calls = spark.sparkContext.accumulator(0)
+
+    def seen(x):
+        calls.add(1)
+        return x
+
+    probe = F.udf(seen, LongType()).asNondeterministic()
+    df = spark.createDataFrame(edges, ["src", "dst"]).select(
+        probe("src").alias("src"), "dst"
+    )
+    out = {r["node"]: r["core_degree"] for r in kcore(df, k=3).collect()}
+    assert out == {1: 3, 2: 3, 3: 3, 4: 3}
+    assert calls.value == len(edges)
+
+
+def test_kcore_max_iter_counts_peel_rounds(spark):
+    from manufacturing_data_integration_tool_spark.ops.graph import kcore
+
+    # Triangle 1-2-3 with an L-edge tail 3-4-...-(3+L): at k=2 each round
+    # peels exactly the tail's far end, so the 2-core needs exactly L peels.
+    tail = 4
+    edges = [(1, 2), (2, 3), (1, 3)] + [(i, i + 1) for i in range(3, 3 + tail)]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    out = {r["node"]: r["core_degree"] for r in kcore(df, k=2, max_iter=tail).collect()}
+    assert out == {1: 2, 2: 2, 3: 2}
+    with pytest.raises(RuntimeError, match="max_iter"):
+        kcore(df, k=2, max_iter=tail - 1)
+
+
+def test_kcore_empty_input(spark):
+    from manufacturing_data_integration_tool_spark.ops.graph import kcore
+
+    df = spark.createDataFrame([], "src bigint, dst bigint")
+    out = kcore(df, k=2)
+    assert out.dtypes == [("node", "bigint"), ("core_degree", "bigint")]
+    assert out.collect() == []
+
+
 def test_longest_daily_streak_hand_case(spark):
     from manufacturing_data_integration_tool_spark.ops.temporal import (
         longest_daily_streak,
