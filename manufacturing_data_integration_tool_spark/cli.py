@@ -7,6 +7,9 @@ The whole glob is one distributed read with per-file lineage, and the
 batch summary (``N/M files processed successfully``) comes from a
 ``groupBy(FileSource)`` over the same cached validation pass.
 
+``--dry-run`` is ``run_etl_pipeline`` with no sink and no archive step. A
+real run stopped by ``error_handling=fail_fast`` prints its counts, exits 1.
+
 Usage:
     python -m manufacturing_data_integration_tool_spark --input data.csv --config mapping.xml
     python -m manufacturing_data_integration_tool_spark --batch 'raw/*.csv' --config mapping.xml --output-dir out/
@@ -21,9 +24,7 @@ import sys
 from typing import Optional, Sequence
 
 from .config import load_config
-from .pipeline import run_etl_pipeline
-from .plans.validator import validate
-from .sources.readers import read_source_csv
+from .pipeline import ValidationFailFast, run_etl_pipeline
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -68,54 +69,49 @@ def main(argv: Optional[Sequence[str]] = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
     cfg = load_config(args.config)
 
-    if args.dry_run:
-        df = read_source_csv(spark, path, cfg)
-        res = validate(df, cfg)
-        annotated = res.annotated.persist()
-        try:
-            from pyspark.sql import functions as F
-
-            counts = annotated.agg(
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.when(F.size("errors") == 0, 1).otherwise(0)).alias("valid"),
-            ).collect()[0]
-            total, valid = counts["total"] or 0, counts["valid"] or 0
-            print(f"[DRY RUN] total={total} valid={valid} invalid={total - valid}")
-            preview = res.errors.limit(5).collect()
-            for r in preview:
-                print(f"  error: {r['field_name']} {r['error_type']}: {r['error_message']}")
-        finally:
-            annotated.unpersist()
-        spark.stop()
-        return 0
-
-    report = run_etl_pipeline(
-        spark,
-        path,
-        cfg,
-        output_dir=args.output_dir,
-        archive=bool(args.archive_dir) or None,
-        archive_dir=args.archive_dir,
-    )
-    print(
-        f"total={report.total_records} valid={report.valid_records} "
-        f"invalid={report.invalid_records} ({report.valid_pct:.1f}% valid) "
-        f"inserted={report.rows_inserted} errors_logged={report.errors_logged}"
-    )
-    for fc in report.file_counts:
-        status = "OK " if fc["invalid"] == 0 else "ERR"
-        print(f"  {status} {fc['file']}: total={fc['total']} valid={fc['valid']} invalid={fc['invalid']}")
-    if report.file_counts:
-        print(
-            f"BATCH COMPLETE: {report.files_succeeded}/{len(report.file_counts)} "
-            "files fully valid"
+    code = 0
+    try:
+        report = run_etl_pipeline(
+            spark,
+            path,
+            cfg,
+            output_dir=None if args.dry_run else args.output_dir,
+            archive=False if args.dry_run else bool(args.archive_dir) or None,
+            archive_dir=args.archive_dir,
         )
+    except ValidationFailFast as exc:
+        # raised before any sink write, so a dry run still succeeds; the
+        # counted report rides on the exception
+        report = exc.report
+        if not args.dry_run:
+            print(f"Error: {exc}", file=sys.stderr)
+            code = 1
+    spark.stop()
+
+    if args.dry_run:
+        print(
+            f"[DRY RUN] total={report.total_records} valid={report.valid_records} "
+            f"invalid={report.invalid_records}"
+        )
+    else:
+        print(
+            f"total={report.total_records} valid={report.valid_records} "
+            f"invalid={report.invalid_records} ({report.valid_pct:.1f}% valid) "
+            f"inserted={report.rows_inserted} errors_logged={report.errors_logged}"
+        )
+        for fc in report.file_counts:
+            status = "OK " if fc["invalid"] == 0 else "ERR"
+            print(f"  {status} {fc['file']}: total={fc['total']} valid={fc['valid']} invalid={fc['invalid']}")
+        if report.file_counts:
+            print(
+                f"BATCH COMPLETE: {report.files_succeeded}/{len(report.file_counts)} "
+                "files fully valid"
+            )
     for r in report.error_preview:
         print(f"  error: {r['field_name']} {r['error_type']}: {r['error_message']}")
     if report.archived:
         print(f"archived {len(report.archived)} file(s)")
-    spark.stop()
-    return 0
+    return code
 
 
 if __name__ == "__main__":

@@ -1,7 +1,9 @@
 """Batch ETL pipeline: scan -> validate -> project -> sinks -> summary.
 
 Spark rebuild of ``run_etl_pipeline`` (``src/etl_processor.py:182-233``) and
-the glob-batch driver (``src/main.py:34-55``). Differences by design:
+the glob-batch driver (``src/main.py:34-55``). :func:`load_batch` is the one
+validate -> count -> sink body: for this batch read, the CLI dry run and each
+file-stream micro-batch. Differences by design:
 
 * the whole glob is ONE distributed read (lineage kept per-file via
   ``input_file_name()``), not a driver loop;
@@ -24,11 +26,12 @@ from .config import IntegrationConfig, load_config, spark_type_for
 from .plans.validator import ValidationResult, validate
 from .sources.archive import archive_file
 from .sources.readers import FILE_SOURCE_COL, read_source_csv
-from .sources.sinks import jdbc_writer_options, write_errors, write_valid
+from .sources.sinks import ERROR_TABLE, jdbc_writer_options, write_errors, write_valid
 
 __all__ = [
     "PipelineReport",
     "ValidationFailFast",
+    "load_batch",
     "project_to_target",
     "run_etl_pipeline",
     "processing_summary",
@@ -99,6 +102,79 @@ def project_to_target(
     )
 
 
+def load_batch(
+    df: DataFrame,
+    cfg: IntegrationConfig,
+    *,
+    output_dir: Optional[str] = None,
+    sink_format: str = "parquet",
+    jdbc: bool = False,
+    lookup_values: Optional[Mapping[str, Any]] = None,
+    dim_tables: Optional[Mapping[str, DataFrame]] = None,
+    extensions: bool = False,
+) -> PipelineReport:
+    """Validate, count and load one frame that carries ``FileSource``
+    lineage. ``jdbc`` loads the target table and ``ERROR_TABLE`` on
+    ``cfg.target``'s connection; else ``output_dir`` receives
+    ``quality_data/`` and ``validation_errors/``; with neither, nothing is
+    written. ``fail_fast`` raises before any sink write."""
+    report = PipelineReport()
+    result: ValidationResult = validate(
+        df, cfg, lookup_values=lookup_values, dim_tables=dim_tables, extensions=extensions
+    )
+
+    # The annotated frame fans out to counters + valid sink + error sink;
+    # persist it so the scan+validation plan executes ONCE, not once per
+    # consumer (3 full scans of the source at 100 TB otherwise).
+    annotated = result.annotated.persist()
+    try:
+        # per-file breakdown (A4) in one agg over the cached frame — the
+        # glob stays ONE distributed read, lineage recovers the per-file
+        # loop; the totals (A3) are its sums, so no second counting job
+        per_file = (
+            annotated.groupBy(F.col(FILE_SOURCE_COL).alias("file"))
+            .agg(
+                F.count(F.lit(1)).alias("total"),
+                F.sum(F.when(F.size("errors") == 0, 1).otherwise(0)).alias("valid"),
+                F.sum(F.size("errors")).alias("errors"),
+            )
+            .collect()
+        )
+        report.file_counts = [
+            {"file": r["file"], "total": r["total"], "valid": r["valid"], "invalid": r["total"] - r["valid"]}
+            for r in per_file
+        ]
+        report.total_records = sum(f["total"] for f in report.file_counts)
+        report.valid_records = sum(f["valid"] for f in report.file_counts)
+        report.invalid_records = report.total_records - report.valid_records
+
+        # first-5 error preview (O2) — tiny limit, rides the cache
+        report.error_preview = [r.asDict() for r in result.errors.limit(5).collect()]
+
+        if cfg.etl.error_handling.strip().lower() in ("fail_fast", "failfast", "abort"):
+            if report.invalid_records > 0:
+                raise ValidationFailFast(report)
+
+        target = project_to_target(result.valid, cfg)
+        if jdbc:
+            opts = jdbc_writer_options(cfg.target, cfg.etl)
+            report.rows_inserted = write_valid(target, "", fmt="jdbc", jdbc_options=opts)
+            report.errors_logged = write_errors(
+                result.errors, "", fmt="jdbc", jdbc_options={**opts, "dbtable": ERROR_TABLE}
+            )
+        elif output_dir:
+            report.rows_inserted = write_valid(target, f"{output_dir}/quality_data", fmt=sink_format)
+            report.errors_logged = write_errors(
+                result.errors, f"{output_dir}/validation_errors", fmt=sink_format
+            )
+        else:
+            report.rows_inserted = report.valid_records
+            report.errors_logged = sum(r["errors"] for r in per_file)
+    finally:
+        annotated.unpersist()
+    return report
+
+
 def run_etl_pipeline(
     spark: SparkSession,
     input_path: str,
@@ -113,81 +189,22 @@ def run_etl_pipeline(
     archive: Optional[bool] = None,
     archive_dir: Optional[str] = None,
 ) -> PipelineReport:
-    """End-to-end run over one file or a glob. ``output_dir`` receives
-    ``quality_data/`` and ``validation_errors/`` for file-format sinks."""
+    """End-to-end run over one file or a glob: read, :func:`load_batch`,
+    then (``archive`` on and ``archive_dir`` given) archive every file the
+    read listed, header-only ones included."""
     cfg = load_config(config) if isinstance(config, str) else config
-    report = PipelineReport()
-
     df = read_source_csv(spark, input_path, cfg)
-    result: ValidationResult = validate(
-        df, cfg, lookup_values=lookup_values, dim_tables=dim_tables, extensions=extensions
+    report = load_batch(
+        df, cfg, output_dir=output_dir, sink_format=sink_format, jdbc=jdbc,
+        lookup_values=lookup_values, dim_tables=dim_tables, extensions=extensions,
     )
-
-    # The annotated frame fans out to counters + valid sink + error sink;
-    # persist it so the scan+validation plan executes ONCE, not once per
-    # consumer (3 full scans of the source at 100 TB otherwise).
-    annotated = result.annotated.persist()
-    try:
-        # one pass for the counters (A3) instead of three count() jobs —
-        # this also materializes the cache the sinks reuse
-        counts = annotated.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.when(F.size("errors") == 0, 1).otherwise(0)).alias("valid"),
-        ).collect()[0]
-        report.total_records = counts["total"] or 0
-        report.valid_records = counts["valid"] or 0
-        report.invalid_records = report.total_records - report.valid_records
-
-        # per-file breakdown (A4): one agg over the cached frame — the glob
-        # stays ONE distributed read, lineage recovers the per-file loop
-        if FILE_SOURCE_COL in annotated.columns:
-            report.file_counts = [
-                {
-                    "file": r["file"],
-                    "total": r["total"],
-                    "valid": r["valid"],
-                    "invalid": r["total"] - r["valid"],
-                }
-                for r in annotated.groupBy(F.col(FILE_SOURCE_COL).alias("file"))
-                .agg(
-                    F.count(F.lit(1)).alias("total"),
-                    F.sum(F.when(F.size("errors") == 0, 1).otherwise(0)).alias("valid"),
-                )
-                .collect()
-            ]
-
-        # first-5 error preview (O2) — tiny limit, rides the cache
-        report.error_preview = [r.asDict() for r in result.errors.limit(5).collect()]
-
-        if cfg.etl.error_handling.strip().lower() in ("fail_fast", "failfast", "abort"):
-            if report.invalid_records > 0:
-                raise ValidationFailFast(report)
-
-        target = project_to_target(result.valid, cfg)
-        if jdbc:
-            opts = jdbc_writer_options(cfg.target, cfg.etl)
-            report.rows_inserted = write_valid(target, "", fmt="jdbc", jdbc_options=opts)
-            report.errors_logged = write_errors(result.errors, "", fmt="jdbc", jdbc_options=opts)
-        elif output_dir:
-            report.rows_inserted = write_valid(target, f"{output_dir}/quality_data", fmt=sink_format)
-            report.errors_logged = write_errors(
-                result.errors, f"{output_dir}/validation_errors", fmt=sink_format
-            )
-        else:
-            report.rows_inserted = report.valid_records
-            report.errors_logged = result.errors.count()
-    finally:
-        annotated.unpersist()
 
     do_archive = cfg.etl.archive_processed_files if archive is None else archive
     if do_archive and archive_dir:
-        import glob as _glob
-
-        for f in sorted(_glob.glob(input_path)) or [input_path]:
-            dest = archive_file(spark, f, archive_dir, enabled=True)
-            if dest:
-                report.archived.append(dest)
-
+        # inputFiles() lists from the read's file index (no job) and keeps
+        # the scheme, so a remote glob archives what it read
+        for f in sorted(df.inputFiles()):
+            report.archived.append(archive_file(spark, f, archive_dir))
     return report
 
 

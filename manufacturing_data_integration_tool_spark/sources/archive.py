@@ -4,19 +4,26 @@ Reference: ``archive_file`` renames into ``data/processed/`` with a
 ``{YYYYmmdd_HHMMSS}_{name}`` prefix, gated by the
 ``ArchiveProcessedFiles`` flag (``src/etl_processor.py:160-179``).
 
-Batch mode uses the Hadoop FS API through the active session (works for
-local paths and any configured DFS); streaming mode should prefer the file
-source's built-in ``cleanSource='archive'`` + ``sourceArchiveDir`` instead
-(see ``streaming.file_pipeline``).
+Paths go through Hadoop ``Path`` and the session's file systems, so local
+paths and ``file:`` / ``s3a://`` / ``hdfs://`` URIs keep scheme and
+authority; a path with a scheme is read as the percent-encoded URI Spark
+lists files as (``inputFiles()``, ``input_file_name()``).
 """
 
 from __future__ import annotations
 
 from datetime import datetime
-from pathlib import Path
 from typing import Optional
+from urllib.parse import urlsplit
 
 from pyspark.sql import SparkSession
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    jvm = spark.sparkContext._jvm
+    if urlsplit(path).scheme:
+        return jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(path))
+    return jvm.org.apache.hadoop.fs.Path(path)
 
 
 def archive_file(
@@ -27,23 +34,19 @@ def archive_file(
     enabled: bool = True,
     now: Optional[datetime] = None,
 ) -> Optional[str]:
-    """Move ``source_path`` into ``archive_dir`` with a timestamp prefix.
-    Returns the destination path, or None when disabled (reference gate,
-    etl_processor.py:162-163)."""
+    """Move ``source_path`` into ``archive_dir`` (default: ``processed/``
+    beside the source) with a timestamp prefix. Returns the destination
+    path, or None when disabled (reference gate, etl_processor.py:162-163)."""
     if not enabled:
         return None
-    src = Path(source_path)
-    dest_dir = Path(archive_dir) if archive_dir else src.parent / "processed"
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    src = _hadoop_path(spark, source_path)
+    dest_dir = _hadoop_path(spark, archive_dir) if archive_dir else Path(src.getParent(), "processed")
     stamp = (now or datetime.now()).strftime("%Y%m%d_%H%M%S")
-    dest = dest_dir / f"{stamp}_{src.name}"
+    dest = Path(dest_dir, f"{stamp}_{src.getName()}")
 
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    src_p = jvm.org.apache.hadoop.fs.Path(str(src))
-    fs = src_p.getFileSystem(conf)
-    dest_p = jvm.org.apache.hadoop.fs.Path(str(dest))
-    fs.mkdirs(dest_p.getParent())
-    if not fs.rename(src_p, dest_p):
-        raise IOError(f"archive rename failed: {src} -> {dest}")
-    return str(dest)
+    dest_dir.getFileSystem(conf).mkdirs(dest_dir)
+    if not src.getFileSystem(conf).rename(src, dest):
+        raise IOError(f"archive rename failed: {source_path} -> {dest.toString()}")
+    return dest.toString()

@@ -8,8 +8,11 @@ Reference behavior being re-expressed (SURVEY.md S4/S5):
   on Spark that's a single ``df.write`` — JDBC ``batchsize``/``numPartitions``
   options replace the hand-rolled commit chunking, and the parquet/Delta
   path is a plain distributed append.
-* validation errors -> error table with ``field_value`` truncated to 255
-  chars (``src/etl_processor.py:110-144``).
+* validation errors -> the error table (``ERROR_TABLE``) with
+  ``field_value`` truncated to 255 chars (``src/etl_processor.py:110-144``).
+
+Both writers share one ``_write``: JDBC pre-coalesce, ``observe`` count,
+format dispatch.
 """
 
 from __future__ import annotations
@@ -21,6 +24,8 @@ from pyspark.sql import DataFrame, functions as F
 from ..config import EtlSettings, TargetSettings
 
 ERROR_SINK_COLUMNS = ("FileSource", "ErrorType", "ErrorMessage", "FieldName", "FieldValue")
+# the reference's error-log table (src/etl_processor.py:110-144)
+ERROR_TABLE = "Production.DataValidationErrors"
 
 
 def jdbc_writer_options(target: TargetSettings, etl: EtlSettings) -> dict[str, str]:
@@ -34,7 +39,15 @@ def jdbc_writer_options(target: TargetSettings, etl: EtlSettings) -> dict[str, s
     }
 
 
-def _write_counted(df: DataFrame, write) -> int:
+def _write(
+    df: DataFrame,
+    path_or_table: str,
+    *,
+    fmt: str,
+    mode: str,
+    jdbc_options: Optional[Mapping[str, str]],
+    partition_by: Optional[list[str]] = None,
+) -> int:
     """Run ONE write job and return the row count via an ``observe`` metric —
     the count rides along with the write instead of a second full scan
     (the reference reports rows_inserted, etl_processor.py:103; a separate
@@ -42,32 +55,25 @@ def _write_counted(df: DataFrame, write) -> int:
     100 TB is two scans of the table)."""
     from pyspark.sql import Observation
 
+    if fmt == "jdbc" and jdbc_options and "numPartitions" in jdbc_options:
+        # Take over the JDBC ``numPartitions`` cap BELOW the observe node.
+        # When the option reaches Spark's V1 JDBC writer, the execution that
+        # moves rows no longer reports the plan's ``CollectMetrics`` node:
+        # ``Observation.get`` returns 0 while every row lands (verified
+        # against embedded Derby in tests/test_jdbc_sink.py). ``coalesce``
+        # has the option's semantics (it only ever REDUCES the partition
+        # count), so apply it here and strip the option.
+        jdbc_options = dict(jdbc_options)
+        df = df.coalesce(int(jdbc_options.pop("numPartitions")))
     obs = Observation()
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    write(observed)
+    writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(mode)
+    if fmt == "jdbc":
+        writer.format("jdbc").options(**(jdbc_options or {})).save()
+    else:
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.format(fmt).save(path_or_table)
     return int(obs.get["n"])
-
-
-def _pre_coalesce_for_jdbc(
-    df: DataFrame, jdbc_options: Optional[Mapping[str, str]]
-) -> tuple[DataFrame, Optional[Mapping[str, str]]]:
-    """Take over the JDBC ``numPartitions`` cap BELOW the observe node.
-
-    When the ``numPartitions`` option reaches Spark's V1 JDBC writer, the
-    writer probes/derives the Dataset JVM-side and the execution that
-    actually moves rows no longer reports the plan's ``CollectMetrics``
-    node — ``Observation.get`` deterministically returns 0 while every
-    row lands (verified against embedded Derby in
-    tests/test_jdbc_sink.py: ANY write with the option set reports 0;
-    without it the count is always right). So the option never reaches
-    the writer: we apply the identical semantics ourselves with
-    ``coalesce`` (which, like the option, only ever REDUCES partition
-    count) under the observe node, and strip it from the option map."""
-    if jdbc_options and "numPartitions" in jdbc_options:
-        opts = dict(jdbc_options)
-        n = int(opts.pop("numPartitions"))
-        return df.coalesce(n), opts
-    return df, jdbc_options
 
 
 def write_valid(
@@ -80,19 +86,7 @@ def write_valid(
     partition_by: Optional[list[str]] = None,
 ) -> int:
     """Append valid rows to the target sink; returns the row count."""
-    if fmt == "jdbc":
-        df, jdbc_options = _pre_coalesce_for_jdbc(df, jdbc_options)
-
-    def write(observed: DataFrame) -> None:
-        writer = observed.write.mode(mode)
-        if fmt == "jdbc":
-            writer.format("jdbc").options(**(jdbc_options or {})).save()
-        else:
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.format(fmt).save(path_or_table)
-
-    return _write_counted(df, write)
+    return _write(df, path_or_table, fmt=fmt, mode=mode, jdbc_options=jdbc_options, partition_by=partition_by)
 
 
 def shape_errors_for_sink(errors: DataFrame, file_source: Optional[str] = None) -> DataFrame:
@@ -117,18 +111,10 @@ def write_errors(
     mode: str = "append",
     jdbc_options: Optional[Mapping[str, str]] = None,
 ) -> int:
+    """Append the error report, shaped for the sink, to the error sink;
+    returns the row count."""
     shaped = shape_errors_for_sink(errors, file_source)
-    if fmt == "jdbc":
-        shaped, jdbc_options = _pre_coalesce_for_jdbc(shaped, jdbc_options)
-
-    def write(observed: DataFrame) -> None:
-        writer = observed.write.mode(mode)
-        if fmt == "jdbc":
-            writer.format("jdbc").options(**(jdbc_options or {})).save()
-        else:
-            writer.format(fmt).save(path_or_table)
-
-    return _write_counted(shaped, write)
+    return _write(shaped, path_or_table, fmt=fmt, mode=mode, jdbc_options=jdbc_options)
 
 
 def write_orc(df, path: str, *, mode: str = "overwrite", partition_by=None):

@@ -2,11 +2,12 @@
 
 The reference's batch-of-files loop + archive-on-success
 (``src/main.py:34-55``, ``src/etl_processor.py:160-179``) is exactly the
-contract of a Structured Streaming **file source** with
-``cleanSource='archive'``: new files appear, each micro-batch runs
-validate -> project -> sinks via ``foreachBatch``, and consumed files are
-moved aside by the engine with exactly-once bookkeeping in the checkpoint —
-no hand-rolled success tracking.
+contract of a Structured Streaming **file source**: new files appear, each
+micro-batch runs the batch pipeline's own body (``pipeline.load_batch``:
+validate -> count -> sinks, ``error_handling`` included) via
+``foreachBatch``, and the files in the batch's per-file report are archived
+after its sinks commit. The checkpoint log keeps the exactly-once
+bookkeeping — no hand-rolled success tracking.
 
 Event-time analytics (watermark + tumbling/session windows) are greenfield
 capability for the ``events`` stream (SURVEY.md §2.9): the reference has no
@@ -21,11 +22,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import IntegrationConfig
-from ..pipeline import project_to_target
-from ..plans.validator import validate
+from ..pipeline import load_batch
 from ..sources.archive import archive_file
 from ..sources.readers import FILE_SOURCE_COL, source_schema
-from ..sources.sinks import shape_errors_for_sink
 
 
 def ensure_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -51,17 +50,22 @@ def start_file_stream(
     lookup_values: Optional[Mapping[str, Any]] = None,
     max_files_per_trigger: Optional[int] = 128,
 ) -> StreamingQuery:
-    """Stream CSVs from ``input_dir`` through validation into parquet sinks.
+    """Stream CSVs from ``input_dir`` through :func:`pipeline.load_batch`
+    into parquet sinks under ``output_dir``.
 
     ``available_now=True`` drains everything currently present then stops —
     deterministic for tests and batch-style backfills; ``False`` keeps
     watching the directory like a daemonized version of the reference CLI.
+    Under ``error_handling=fail_fast`` a batch with an invalid row writes
+    nothing, archives nothing and terminates the query with
+    :class:`pipeline.ValidationFailFast` as its cause.
 
-    ``max_files_per_trigger`` defaults to 128 so the per-batch archive step
-    (which collects the DISTINCT file list of the batch to the driver for
-    renames) is bounded by construction, not by assumption — a backlogged
+    ``max_files_per_trigger`` defaults to 128 so the per-batch report (one
+    row per file, collected to the driver) and the archive renames it
+    drives are bounded by construction, not by assumption — a backlogged
     inbox drains over several batches instead of one unbounded batch.
-    Pass ``None`` to remove the bound.
+    Pass ``None`` to remove the bound. Files whose batch has no data rows
+    (header-only) are not in the report and stay in the inbox.
     """
     reader = (
         spark.readStream.option("header", config.source.has_header)
@@ -77,28 +81,12 @@ def start_file_stream(
     # *next* trigger, so an ``availableNow`` drain would leave the final
     # batch's files in the inbox forever (an inbox that never empties grows
     # unboundedly). The checkpoint log already remembers processed files, so
-    # moving them after the batch commits is safe.
+    # moving them after the batch's sinks commit is safe.
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        result = validate(batch_df, config, lookup_values=lookup_values)
-        annotated = result.annotated.persist()
-        try:
-            project_to_target(result.valid, config).write.mode("append").parquet(
-                f"{output_dir}/quality_data"
-            )
-            shape_errors_for_sink(result.errors).write.mode("append").parquet(
-                f"{output_dir}/validation_errors"
-            )
-            if archive_dir:
-                files = [
-                    r[0]
-                    for r in annotated.select(FILE_SOURCE_COL).distinct().collect()
-                    if r[0]
-                ]
-                for uri in sorted(files):
-                    path = uri[len("file:"):] if uri.startswith("file:") else uri
-                    archive_file(spark, path, archive_dir, enabled=True)
-        finally:
-            annotated.unpersist()
+        report = load_batch(batch_df, config, output_dir=output_dir, lookup_values=lookup_values)
+        if archive_dir:
+            for f in sorted(fc["file"] for fc in report.file_counts):
+                archive_file(spark, f, archive_dir)
 
     writer = stream.writeStream.foreachBatch(process_batch).option("checkpointLocation", checkpoint_dir)
     if available_now:
