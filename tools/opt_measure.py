@@ -146,9 +146,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entrymod.queries()
-    names = args.queries
-    if not names:
-        names = sorted(qs)
+    names = args.queries or list(qs)
     missing = [n for n in names if n not in qs]
     if missing:
         raise SystemExit(f"unknown queries: {missing}")

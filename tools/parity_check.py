@@ -29,6 +29,17 @@ TABLES = (
 ).split()
 
 
+def create_views(con: duckdb.DuckDBPyConnection, sf: str) -> None:
+    """One DuckDB view per table under ``sf``. A table may be a single
+    parquet file or a Spark-style directory of part files; DuckDB's
+    ``read_parquet`` finds no files in a directory, so that takes a glob."""
+    for t in TABLES:
+        path = f"{sf}/{t}.parquet"
+        if Path(path).is_dir():
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
     if len(df):
@@ -96,14 +107,11 @@ def main() -> int:
         .getOrCreate()
     )
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
-        )
+    create_views(con, args.sf)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    names = args.queries or sorted(qs)
+    names = args.queries or list(qs)
     failures = 0
     report: dict[str, dict] = {}
     for name in names:
