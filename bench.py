@@ -6,11 +6,17 @@ capture and shipped `parsed: null`):
     {"metric": "headline_total", "value": <sec>, "unit": "sec",
      "queries": {<10 slowest>: sec}, "n": <count>, "sf": "<dir>"}
 
-Full per-query timings are written to BENCH_DETAIL.json next to this file
-for round-over-round diffing.
+Full per-query timings are written to BENCH_DETAIL.json next to this file.
+The bench only writes that file, never reads it, so a run depends on the
+code and the data alone.
 
 Each query is executed to completion (count() over the result — forces the
-full plan without driver-side materialization of every row).
+full plan without driver-side materialization of every row), in one batch
+in one session. Host speed drifts 20-50 % within hours, so compare seconds
+only within a session; for isolated or A/B timing of chosen queries use
+``tools/opt_measure.py`` (``--baseline-ref <ref>`` times a git ref and the
+working tree back to back), which shares this module's session, input
+warm-up, cache release and GC drain.
 """
 
 from __future__ import annotations
@@ -135,17 +141,8 @@ EXCLUDED = {
 HEADLINE = [q for q in __spark_entry__.queries() if q not in EXCLUDED]
 
 
-def main() -> None:
-    qs = __spark_entry__.queries()
-    # a renamed query would otherwise start being timed unannounced,
-    # leaving its old exclusion behind
-    stale = set(EXCLUDED) - set(qs)
-    if stale:
-        raise SystemExit(f"bench ledger names unregistered queries: {sorted(stale)}")
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
+def build_session(cpus: str):
+    """The local session both this bench and tools/opt_measure.py time in."""
     from pyspark.sql import SparkSession
 
     spark = (
@@ -158,51 +155,65 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
-    # Warm-up: JVM/codegen init plus one touch of every input file, so the
-    # first timed query isn't charged session init, parquet footer reads,
-    # or OS page-cache misses the later queries don't pay either.
-    spark.range(10).count()
-    from pathlib import Path as _P
 
+def warm_inputs(spark, sf_dir: str) -> None:
+    """JVM/codegen init plus one touch of every input file, so the first
+    timed query isn't charged session init, parquet footer reads, or OS
+    page-cache misses the later queries don't pay either."""
     from manufacturing_data_integration_tool_spark.sources.readers import read_table
 
-    for p in sorted(_P(sf_dir).glob("*.parquet")):
+    spark.range(10).count()
+    for p in sorted(Path(sf_dir).glob("*.parquet")):
         read_table(spark, sf_dir, p.stem).count()  # nanos-safe for events
+
+
+def release_cached_blocks(spark) -> None:
+    """Drop cached tables and persistent RDD blocks, so every query starts
+    from the same clean storage pool. The checkpointed graph family
+    (q152/q283) otherwise leaks localCheckpoint blocks into the storage
+    memory of every later query (q152 read 12.8 s crowded vs 6.6 s alone).
+    py4j-private, local-mode lever; a no-op under Spark Connect."""
+    try:
+        spark.catalog.clearCache()
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist()
+    except Exception:
+        pass
+
+
+def gc_drain(spark) -> None:
+    """Collect the JVM heap, so a query does not pay a major collection
+    its predecessors incurred (q140 read 5.45 s after a crowded batch vs
+    3.37 s alone on the same plan). Local-mode lever: driver == executor
+    here; on a cluster it collects only the driver, and under Spark
+    Connect the py4j handle does not exist."""
+    try:
+        spark.sparkContext._jvm.System.gc()
+    except AttributeError:
+        pass
+
+
+def main() -> None:
+    qs = __spark_entry__.queries()
+    # a renamed query would otherwise start being timed unannounced,
+    # leaving its old exclusion behind
+    stale = set(EXCLUDED) - set(qs)
+    if stale:
+        raise SystemExit(f"bench ledger names unregistered queries: {sorted(stale)}")
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+    spark = build_session(cpus)
+    warm_inputs(spark, sf_dir)
+
     # Each query runs twice; the reported time is the min (steady state).
     # Run 1 pays per-query-shape JIT/codegen compilation that a long-lived
     # cluster pays once per application, not per query — reporting it would
-    # benchmark the JIT, not the plan.
-    def _release_cached_blocks() -> None:
-        # r11 verdict item #3: the checkpointed graph family (q152/q283)
-        # leaks localCheckpoint blocks into the storage memory of every
-        # LATER query — the in-batch crowding that made q152 read 12.8s
-        # in-batch vs 6.6s isolated. Drop each query's cached tables and
-        # persistent RDD blocks before the next timing so every query
-        # starts from the same clean storage pool, in-batch as isolated.
-        # py4j-private + local-mode lever, same guard class as the GC
-        # drain below (no-op under Spark Connect).
-        try:
-            spark.catalog.clearCache()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:
-            pass
-
-    def _gc_drain() -> None:
-        # r12: the r11-verdict release fix closed most of the in-batch vs
-        # isolated gap, but heap inheritance remained (r12 pre-fix run:
-        # q140 5.45 s in-batch vs 3.37 s isolated on identical plans) —
-        # the isolated tail pass already drains GC before timing, so the
-        # headline loop now starts every query from the same clean heap.
-        # The drain runs OUTSIDE the timed region (between queries), so
-        # the methodology — min-of-2 count() per query — is unchanged.
-        # LOCAL-MODE-ONLY lever, same guard class as the tail drain.
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except AttributeError:
-            pass
-
+    # benchmark the JIT, not the plan. The release and GC drain run between
+    # queries, outside the timed region.
     timings: dict[str, float] = {}
     total = 0.0
     for name in HEADLINE:
@@ -214,124 +225,19 @@ def main() -> None:
         dt = round(best, 3)
         timings[name] = dt
         total += dt
-        _release_cached_blocks()
-        _gc_drain()
-
-    # Isolated heavy-tail pass (r7 verdict #7, RULE-BASED since r10 per
-    # the r9 verdict #2): after the crowded batch, re-time with nothing
-    # else in flight (n=3, min) every query that needs adjudication:
-    #   (a) fixed members — the checkpoint-heavy graph family plus the
-    #       recurring watch list (q207's benign broadcast->SMJ size flip
-    #       and the q175-q177 trio) the r8 verdict pinned;
-    #   (b) the 5 slowest in-batch queries;
-    #   (c) MECHANICAL REGRESSION RULE: every query whose in-batch time
-    #       exceeds 2x its previous run's best known time (the prior
-    #       BENCH_DETAIL entry, preferring its isolated number when one
-    #       exists) and is >= 0.3 s now — sub-0.3 s deltas are pure
-    #       fixed-overhead noise per the r9 host-contention adjudication.
-    # Everything is recorded alongside the crowded numbers so a
-    # round-over-round regression can be adjudicated (crowding vs real)
-    # from BENCH_DETAIL alone, with no manual isolated re-run ritual.
-    detail_path = Path(__file__).resolve().parent / "BENCH_DETAIL.json"
-    prev_best: dict[str, float] = {}
-    prev_soft: set[str] = set()
-    if detail_path.exists():
-        try:
-            prev = json.loads(detail_path.read_text())
-            prev_iso = prev.get("isolated_tail", {})
-            prev_best = {
-                k: min(v, prev_iso.get(k, v))
-                for k, v in prev.get("queries", {}).items()
-            }
-            prev_soft = set(prev.get("tail_rule", {}).get("soft_flags", []))
-        except (ValueError, OSError, AttributeError):
-            prev_best = {}
-    regressed = sorted(
-        n
-        for n, t in timings.items()
-        if n in prev_best and t >= 0.3 and t > 2.0 * prev_best[n]
-    )
-    # SUB-THRESHOLD DRIFT TRIPWIRE (r11 verdict item #6): the 2.0x gate
-    # alone lets a query step 1.9x per round and compound invisibly
-    # (q62 drifted 3.15s -> 3.60s isolated across r10 -> r11 without ever
-    # tripping). Any query >1.5x its prev-best in-batch is soft-flagged
-    # in BENCH_DETAIL; a query soft-flagged in TWO consecutive rounds is
-    # force-adjudicated isolated this round regardless of the 2.0x gate.
-    soft_flags = sorted(
-        n
-        for n, t in timings.items()
-        if n in prev_best and t >= 0.3 and t > 1.5 * prev_best[n]
-    )
-    two_round_drift = sorted(set(soft_flags) & prev_soft)
-    tail = set(
-        q for q in ("q152_pagerank", "q179_kcore", "q283_hits_scores",
-                    "q292_link_prediction", "q207_sorted_neighborhood",
-                    "q175_inverted_postings", "q176_centroid_similarity",
-                    "q177_fd_violations") if q in timings
-    ) | {n for n, _ in sorted(timings.items(), key=lambda kv: -kv[1])[:5]}
-    tail |= set(regressed)
-    tail |= set(two_round_drift)
-    # bound the pass on a pathologically noisy host: keep the largest
-    # absolute regressions, and SAY what was dropped (no silent caps)
-    capped_out: list[str] = []
-    if len(tail) > 40:
-        keep = set(
-            sorted(tail, key=lambda n: -(timings[n] - prev_best.get(n, 0.0)))[:40]
-        )
-        capped_out = sorted(tail - keep)
-        tail = keep
-    isolated: dict[str, float] = {}
-    for name in sorted(tail):
-        _release_cached_blocks()
-        # one throwaway invocation before the timed runs: the r10
-        # driver bench showed isolated > in-batch for q341/q348 —
-        # the first isolated run was absorbing session warm-up
-        # (GC debt, code-cache churn from the 342-query batch), which
-        # an adjudication pass must not bill to the query (r10 verdict
-        # item 2). The warm-up is the query itself so scratch-reusing
-        # queries (q377-style _SUCCESS guards) measure their steady
-        # state, same as their in-batch posture.
-        qs[name](spark, sf_dir).count()
-        # drain the batch's accumulated GC debt before timing: without
-        # this the first heavy tail query (q283-class, checkpointed
-        # loop tables) pays a major collection the batch incurred.
-        # LOCAL-MODE-ONLY lever (driver == executor here): on a real
-        # cluster this collects only the driver JVM, and under Spark
-        # Connect the py4j _jvm handle doesn't exist at all — hence
-        # the guard (r11 ADVICE)
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except AttributeError:
-            pass
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            best = min(best, time.time() - t0)
-        isolated[name] = round(best, 3)
+        release_cached_blocks(spark)
+        gc_drain(spark)
 
     detail = {
         "metric": "headline_total",
         "value": round(total, 3),
         "unit": "sec",
         "queries": timings,
-        "isolated_tail": isolated,
-        "tail_rule": {
-            "threshold_x": 2.0,
-            "floor_sec": 0.3,
-            "regressed_vs_prev": regressed,
-            "soft_threshold_x": 1.5,
-            "soft_flags": soft_flags,
-            "two_round_drift_adjudicated": two_round_drift,
-            "prev_best_for_tail": {
-                n: prev_best[n] for n in sorted(tail) if n in prev_best
-            },
-            "capped_out": capped_out,
-        },
         "n": len(HEADLINE),
         "sf": sf_dir,
         "cpus": cpus,
     }
+    detail_path = Path(__file__).resolve().parent / "BENCH_DETAIL.json"
     detail_path.write_text(json.dumps(detail, indent=1) + "\n")
 
     slowest = dict(

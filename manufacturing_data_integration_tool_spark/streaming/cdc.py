@@ -20,13 +20,12 @@ small) side.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.merge import merge_upsert
+from .sketches import _open_state, _swap_in
 
 __all__ = ["apply_cdc_stream"]
 
@@ -49,15 +48,16 @@ def apply_cdc_stream(
     deterministic via a monotonic id), merge into the current snapshot,
     write to a staging directory, atomically swap. The swap is
     rename-based — readers see the old or the new snapshot, never a
-    partial write.
+    partial write — and shared with the sketch accumulators, so a crash
+    between its two renames is undone when the stream restarts and the
+    replayed batch re-applies onto the previous snapshot. A merge batch
+    is idempotent, so the swap's batch-id marker is not consulted here.
 
     Returns the StreamingQuery. ``trigger_available_now`` drains pending
     input then stops (the batch-refresh mode); pass False for a
     continuous micro-batch stream.
     """
-    snap = Path(snapshot_path)
-    staging = snap.with_name(snap.name + ".staging")
-    backup = snap.with_name(snap.name + ".previous")
+    snap, staging, backup = _open_state(snapshot_path)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark: SparkSession = batch.sparkSession
@@ -81,11 +81,7 @@ def apply_cdc_stream(
         merged = merge_upsert(target, latest, keys, delete_col=delete_col)
         # materialize BEFORE touching the snapshot dir (the plan reads it)
         merged.write.mode("overwrite").parquet(str(staging))
-        if backup.exists():
-            shutil.rmtree(backup)
-        snap.rename(backup)
-        staging.rename(snap)
-        shutil.rmtree(backup)
+        _swap_in(snap, staging, backup, batch_id)
 
     writer = (
         changes.writeStream.foreachBatch(process_batch)

@@ -56,11 +56,29 @@ def _already_applied(target: Path, batch_id: int) -> bool:
         return False
 
 
+def _open_state(path: str) -> tuple[Path, Path, Path]:
+    """Return the live state directory, its ``.staging`` directory and the
+    ``.previous`` backup ``_swap_in`` parks the old state in.
+
+    A crash between ``_swap_in``'s two renames leaves no live directory
+    and the last complete state in the backup. Rename it back first, so
+    the replayed batch (its offset was never committed) re-applies onto
+    that state instead of starting over from its own delta."""
+    target = Path(path)
+    staging = target.with_name(target.name + ".staging")
+    backup = target.with_name(target.name + ".previous")
+    if not target.exists() and backup.exists():
+        backup.rename(target)
+    return target, staging, backup
+
+
 def _swap_in(target: Path, staging: Path, backup: Path, batch_id: int) -> None:
     """Write the batch-id marker into staging, then rename-swap staging
     into place. The marker travels inside the swapped directory, so state
     and last-applied id are atomic: readers (and the replay guard) see
-    either the old pair or the new pair, never a mix."""
+    either the old pair or the new pair, never a mix. The one swap of
+    every state directory in this package: the four accumulators here and
+    ``cdc.apply_cdc_stream``."""
     (staging / _MARKER).write_text(str(batch_id))
     if backup.exists():
         shutil.rmtree(backup)
@@ -95,9 +113,7 @@ def accumulate_countmin_stream(
     Returns the StreamingQuery. ``trigger_available_now`` drains pending
     input then stops; pass False for a continuous stream.
     """
-    target = Path(sketch_path)
-    staging = target.with_name(target.name + ".staging")
-    backup = target.with_name(target.name + ".previous")
+    target, staging, backup = _open_state(sketch_path)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         if _already_applied(target, batch_id):
@@ -153,9 +169,7 @@ def accumulate_bloom_stream(
     """
     from ..ops.stats import bloom_build
 
-    target = Path(filter_path)
-    staging = target.with_name(target.name + ".staging")
-    backup = target.with_name(target.name + ".previous")
+    target, staging, backup = _open_state(filter_path)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         if _already_applied(target, batch_id):
@@ -209,9 +223,7 @@ def accumulate_oee_stream(
     ``tests/test_streaming.py``. State is one row per calendar day,
     forever — KBs per year of plant history.
     """
-    target = Path(state_path)
-    staging = target.with_name(target.name + ".staging")
-    backup = target.with_name(target.name + ".previous")
+    target, staging, backup = _open_state(state_path)
 
     def day_delta(batch: DataFrame) -> DataFrame:
         # F.shiftleft takes a LITERAL shift; the column-shift form goes
@@ -341,9 +353,7 @@ def accumulate_kmv_stream(
     """
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    target = Path(sketch_path)
-    staging = target.with_name(target.name + ".staging")
-    backup = target.with_name(target.name + ".previous")
+    target, staging, backup = _open_state(sketch_path)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         if _already_applied(target, batch_id):

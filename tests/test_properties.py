@@ -123,20 +123,22 @@ def test_oracle_published_types_are_hash_portable():
     DESCRIBE every oracle (binds only, no execution — ~1s for all 300)
     and assert each published column is from the known-portable set.
     A bare SUM(bigint) in a final SELECT lands here as HUGEINT and fails."""
+    import importlib.util
+    from pathlib import Path
+
     import duckdb
 
     import __spark_entry__ as e
 
+    spec = importlib.util.spec_from_file_location(
+        "parity_check", Path(__file__).resolve().parents[1] / "tools" / "parity_check.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
     ALLOWED = {"VARCHAR", "DOUBLE", "BIGINT", "INTEGER", "BOOLEAN", "DATE"}
-    sf = "/root/testdata/sf0.001"
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
+    mod.create_views(con, "/root/testdata/sf0.001")
     offenders = []
     for name, sql in e.oracle_sql().items():
         for col, ty, *_ in con.execute(f"DESCRIBE ({sql})").fetchall():
@@ -170,6 +172,39 @@ def test_parity_comparator_rejects_int_vs_float():
     # and identical-dtype frames still pass
     ok2, _ = mod.values_equal(mod.canon(a), mod.canon(a.copy()))
     assert ok2
+
+
+def test_plan_audit_fails_on_a_query_that_raises(monkeypatch, tmp_path):
+    """A query that raises gives the same error text at every scale, so
+    its 'fingerprint' never drifts; both audit modes must still fail on it.
+    The session is stubbed: the query raises before any plan exists."""
+    import importlib.util
+    from pathlib import Path
+    from types import SimpleNamespace
+
+    import pytest
+
+    import __spark_entry__ as e
+
+    spec = importlib.util.spec_from_file_location(
+        "plan_audit", Path(__file__).resolve().parents[1] / "tools" / "plan_audit.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    def q1_broken(spark, sf_dir):
+        raise NameError("name 'undefined_helper' is not defined")
+
+    monkeypatch.setattr(e, "queries", lambda: {"q1_broken": q1_broken})
+    monkeypatch.setattr(mod, "_session", lambda: SimpleNamespace(stop=lambda: None))
+    assert mod.sweep(["a", "b"]) == 1
+
+    out = tmp_path / "PLANS.md"
+    monkeypatch.setattr("sys.argv", ["plan_audit.py", "--out", str(out)])
+    with pytest.raises(SystemExit) as exc:
+        mod.main()
+    assert exc.value.code == 1
+    assert "| q1_broken |" in out.read_text() and "ERROR" in out.read_text()
 
 
 def test_bench_ledger_covers_every_registered_query():

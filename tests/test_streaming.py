@@ -601,6 +601,92 @@ def test_streaming_countmin_replay_is_noop(spark, tmp_path):
     assert marker.exists() and marker.read_text().strip() == "0"
 
 
+def test_streaming_countmin_recovers_from_crash_mid_swap(spark, tmp_path):
+    """A crash between the swap's two renames leaves the live state
+    parked at ``<state>.previous`` and no live directory. The restarted
+    stream must put that state back before folding the next batch: the
+    result is the sketch of both files, not of the new file alone, and no
+    backup is left behind."""
+    from manufacturing_data_integration_tool_spark.ops.text import countmin_sketch
+    from manufacturing_data_integration_tool_spark.streaming.sketches import (
+        accumulate_countmin_stream,
+    )
+
+    base = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma"), (3, "alpha delta alpha")],
+        "doc_id long, text string",
+    )
+    src = tmp_path / "crash_in"
+    sketch_dir = tmp_path / "crash_state"
+    backup = tmp_path / "crash_state.previous"
+
+    def land_and_drain(ids):
+        base.filter(F.col("doc_id").isin(*ids)).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(src))
+        q = accumulate_countmin_stream(
+            spark.readStream.schema(base.schema).parquet(str(src)),
+            str(sketch_dir),
+            depth=4,
+            width=64,
+            checkpoint_dir=str(tmp_path / "crash_ckpt"),
+        )
+        q.awaitTermination(120)
+        if q.isActive:
+            q.stop()
+
+    land_and_drain((1, 2))
+    sketch_dir.rename(backup)  # the crash: first rename done, second not
+    land_and_drain((3,))
+
+    got = {
+        (r["row"], r["col"]): r["cnt"]
+        for r in spark.read.parquet(str(sketch_dir)).collect()
+    }
+    want = {
+        (r["row"], r["col"]): r["cnt"]
+        for r in countmin_sketch(base, "text", depth=4, width=64).collect()
+    }
+    assert got == want
+    assert not backup.exists()
+
+
+def test_cdc_stream_recovers_from_crash_mid_swap(spark, tmp_path):
+    """The CDC snapshot swap is the same code path: after a crash between
+    its two renames the restarted stream restores ``snapshot.previous``
+    and merges the next batch onto it instead of failing on the missing
+    snapshot."""
+    import json
+
+    from manufacturing_data_integration_tool_spark.streaming import apply_cdc_stream
+
+    snap = tmp_path / "snapshot"
+    spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]).write.parquet(str(snap))
+    inbox = tmp_path / "changes"
+    inbox.mkdir()
+
+    def land_and_drain(name, changes):
+        (inbox / name).write_text("\n".join(json.dumps(c) for c in changes))
+        q = apply_cdc_stream(
+            spark.readStream.schema("k LONG, v STRING").json(str(inbox)),
+            str(snap),
+            ["k"],
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+        q.awaitTermination(60)
+        if q.isActive:
+            q.stop()
+        assert q.exception() is None
+
+    land_and_drain("b1.jsonl", [{"k": 2, "v": "B2"}])
+    snap.rename(tmp_path / "snapshot.previous")  # crash between the renames
+    land_and_drain("b2.jsonl", [{"k": 3, "v": "C3"}])
+
+    got = {r["k"]: r["v"] for r in spark.read.parquet(str(snap)).collect()}
+    assert got == {1: "a", 2: "B2", 3: "C3"}
+    assert not (tmp_path / "snapshot.previous").exists()
+
+
 def test_streaming_minhash_index_matches_batch_candidates(spark, tmp_path):
     """Incremental LSH dedup: stream three micro-batches through the
     persisted signature index; the union of emitted candidate pairs

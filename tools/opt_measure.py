@@ -1,19 +1,20 @@
-"""Optimization-round measurement harness (r12; --baseline-ref added r13).
+"""Isolated and A/B timing of chosen queries.
 
 For each named query: capture ``.explain("formatted")`` to
-``plans/<round>/<query>_<tag>.txt`` and time it ISOLATED with the bench's
-own methodology (one warm-up invocation, then min of N timed ``count()``
-runs, cache release between runs) plus a noop-sink timing (guide §1.4 —
-computes every column, so column-pruning tricks can't hide work). Prints
-one JSON line per query so runs can be diffed.
+``plans/<round>/<query>_<tag>.txt`` and time it ISOLATED: one warm-up
+invocation, then min of N timed ``count()`` runs with the cache released
+before each, plus an optional noop-sink timing (computes every column, so
+column-pruning tricks can't hide work). The session, input warm-up, cache
+release and GC drain are ``bench.py``'s own functions, so an isolated
+number is taken in the same setting as the bench's in-batch one. Prints one
+JSON line per query so runs can be diffed.
 
-``--baseline-ref <git-ref>`` is the standard A/B evidence mode (r12 verdict
-item 6): the ref is checked out into a throwaway worktree and the SAME
-query list is measured there and at HEAD back-to-back (same minutes, same
-host state), then per-query new/old ratios are printed. Host speed drifts
-20-50% within hours on this box, so isolated numbers from different
-sessions must never be compared directly — always ship a ratio against
-same-minute controls.
+``--baseline-ref <git-ref>`` is the A/B mode: the ref is checked out into a
+throwaway worktree and the SAME query list is measured there and in this
+checkout back-to-back (same minutes, same host state), then per-query
+new/old ratios are printed. Host speed drifts 20-50% within hours, so
+isolated numbers from different sessions must never be compared directly —
+always ship a ratio against same-minute controls.
 
 Usage:
     python tools/opt_measure.py --tag before q283_hits_scores q152_pagerank
@@ -130,20 +131,10 @@ def main() -> None:
         _run_ab(args)
         return
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from bench import build_session, gc_drain, release_cached_blocks, warm_inputs
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("mdi-opt-measure")
-        .config("spark.sql.shuffle.partitions", str(max(int(args.cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(args.cpus)
 
     qs = entrymod.queries()
     names = args.queries or list(qs)
@@ -151,27 +142,14 @@ def main() -> None:
     if missing:
         raise SystemExit(f"unknown queries: {missing}")
 
-    # same warm-up as bench.py: session init + touch every input file
-    spark.range(10).count()
-    from manufacturing_data_integration_tool_spark.sources.readers import read_table
-
-    for p in sorted(Path(args.sf).glob("*.parquet")):
-        read_table(spark, args.sf, p.stem).count()
-
-    def _release() -> None:
-        try:
-            spark.catalog.clearCache()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:
-            pass
+    warm_inputs(spark, args.sf)
 
     plans_dir = REPO / args.plans_dir
     plans_dir.mkdir(parents=True, exist_ok=True)
 
     results: dict[str, dict] = {}
     for name in names:
-        _release()
+        release_cached_blocks(spark)
         spark.sparkContext.setJobDescription(f"opt-measure: {name}")
         df = qs[name](spark, args.sf)
         if not args.no_plan:
@@ -183,10 +161,7 @@ def main() -> None:
         t0 = time.time()
         qs[name](spark, args.sf).count()
         warm = time.time() - t0
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except AttributeError:
-            pass
+        gc_drain(spark)
         best = float("inf")
         for _ in range(args.runs):
             # release BEFORE every run, not just between queries: the
@@ -196,7 +171,7 @@ def main() -> None:
             # "best" 13.3s) — the bench's own between-query release makes
             # each in-batch timing start from a clean storage pool, so the
             # isolated harness must too.
-            _release()
+            release_cached_blocks(spark)
             t0 = time.time()
             qs[name](spark, args.sf).count()
             best = min(best, time.time() - t0)

@@ -11,6 +11,10 @@ plan SHAPE (scan/exchange/join/flag fingerprint) changes with data size —
 the drift a single-SF audit cannot see (e.g. a stats-threshold flip from
 broadcast to shuffle, or an AQE-dependent operator choice leaking into the
 static plan). Exit code 1 if any query drifts, so it can gate CI.
+
+A query that raises at any scale is a failure in both modes: it is printed
+and the exit code is 1 (its error text is the same at every scale, so it
+would otherwise read as "no drift").
 """
 
 from __future__ import annotations
@@ -125,7 +129,7 @@ def sweep(
         # checkpoint_round truncation so the fingerprint covers the full
         # pre-checkpoint lineage. Never used outside audits.
         spark.conf.set("spark.mdi.materialize.mode", "off")
-    drift = []
+    drift, errors = [], []
     for name, fn in entrymod.queries().items():
         fps = {}
         for sf in sfs:
@@ -133,15 +137,21 @@ def sweep(
                 fps[sf] = _fingerprint(_audit_one(spark, fn, sf))
             except Exception as exc:  # noqa: BLE001
                 fps[sf] = ("ERROR", str(exc)[:60])
-        if len(set(fps.values())) > 1:
+        if any(fp[0] == "ERROR" for fp in fps.values()):
+            errors.append(name)
+            tag = "ERROR"
+        elif len(set(fps.values())) > 1:
             drift.append((name, fps))
             tag = "DRIFT(known-benign)" if name in KNOWN_DRIFT else "DRIFT"
-            print(f"{tag} {name}:")
-            for sf, fp in fps.items():
-                print(f"    {sf}: {fp}")
+        else:
+            continue
+        print(f"{tag} {name}:")
+        for sf, fp in fps.items():
+            print(f"    {sf}: {fp}")
     unexplained = [name for name, _ in drift if name not in KNOWN_DRIFT]
     print(f"sweep over {len(sfs)} scales: {len(drift)} queries with "
-          f"plan-shape drift ({len(unexplained)} unexplained)")
+          f"plan-shape drift ({len(unexplained)} unexplained), "
+          f"{len(errors)} failing")
     if json_out:
         import json
 
@@ -151,10 +161,11 @@ def sweep(
             "drift": {n: {sf: list(map(str, fp)) for sf, fp in fps.items()}
                       for n, fps in drift},
             "unexplained": unexplained,
+            "errors": errors,
         }, indent=1) + "\n")
         print(f"wrote {json_out}")
     spark.stop()
-    return 1 if unexplained else 0
+    return 1 if unexplained or errors else 0
 
 
 def main() -> None:
@@ -180,7 +191,7 @@ def main() -> None:
 
     spark = _session()
 
-    rows = []
+    rows, errors = [], []
     for name, fn in entrymod.queries().items():
         try:
             df = fn(spark, args.sf)
@@ -203,6 +214,8 @@ def main() -> None:
             )
         except Exception as exc:  # noqa: BLE001 - audit keeps going, reports the break
             rows.append(f"| {name} | — | — | — | ERROR: {str(exc)[:60]} | — |")
+            errors.append(name)
+            print(f"ERROR {name}: {str(exc)[:200]}")
 
     out = Path(args.out)
     out.write_text(
@@ -225,8 +238,10 @@ def main() -> None:
         "| query | scans | exchanges | reused | joins | notes |\n"
         "|---|---|---|---|---|---|\n" + "\n".join(rows) + "\n"
     )
-    print(f"wrote {out} ({len(rows)} queries)")
+    print(f"wrote {out} ({len(rows)} queries, {len(errors)} failing)")
     spark.stop()
+    if errors:
+        raise SystemExit(1)
 
 
 if __name__ == "__main__":
