@@ -804,9 +804,12 @@ def _langid_pred_expr(
     ``docs`` by id — that join is a full-corpus self-join (2 scans + a
     doc_id shuffle or broadcast) carrying zero information at 100 TB.
     Value-identical to ``language_id(df)[\"predicted_lang\"]`` per row
-    (pinned by tests/test_ops.py::test_langid_pred_expr_matches_op); the
+    (pinned by tests/test_ops.py::test_langid_pred_expr_matches_op). The
     hit expressions are repeated inside greatest()/when() instead of bound
-    once, which Spark's codegen subexpression elimination collapses."""
+    once, and nothing collapses the repeats: Spark does not eliminate
+    common subexpressions inside higher-order-function lambdas (measured
+    in ``ops/dedup.py`` ``shingles_from_tokens``), so each hit count is
+    evaluated at every place it appears."""
     hits = _langid_hit_exprs(text_col, markers)
     return _langid_argmax(hits, default_lang)
 

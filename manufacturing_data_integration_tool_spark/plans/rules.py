@@ -1,10 +1,21 @@
-"""Rule compiler: validation rules -> Spark ``Column`` expressions.
+"""Rule compiler: validation rules -> Spark SQL text.
 
 This is the architectural core of the rebuild. The reference evaluates rules
 row-at-a-time in Python (``src/data_validator.py:75,137-202``); here every
-rule compiles to a vectorized boolean ``Column`` + error-struct builder, so
-the whole validation pass is one Catalyst plan under whole-stage codegen —
-no Python in the hot path, which is what makes the engine viable at 100 TB.
+rule renders to one SQL expression that evaluates to an error struct when
+the rule fails and to NULL when it passes. The validator joins the
+per-field arrays into one ``errors`` expression and parses it with ONE
+``F.expr``: Catalyst parses SQL text and DataFrame calls into the same
+logical plan, but the text costs a handful of py4j round trips where a
+``Column`` tree costs one per node (thousands per ``validate()``). No Python
+runs per row; the plan scales with partitions.
+
+Codegen: each field's entries are packed with ``array_compact``, a lambda
+``filter`` that Spark evaluates interpreted (``CodegenFallback``), so the
+projection that builds ``errors`` runs outside whole-stage codegen. A
+codegen-friendly ``CASE ... array()`` packing returned equal values but
+measured 1.7x slower (0.36 vs 0.21 s over a 0.08 s scan of 40,000 rows), so
+the lambda stays.
 
 Pinned semantic quirks (verified against the reference by execution,
 SURVEY.md §5/§7.3):
@@ -22,17 +33,21 @@ SURVEY.md §5/§7.3):
   ``rlike`` is a *search*.
 * ``date_range``: unparseable -> DATE_FORMAT, else DATE_RANGE on bound
   violation (``src/data_validator.py:167-185``).
-* ``lookup``: membership in a reference set; compiled to ``isin`` for
-  literal sets (big dims go through the broadcast anti-join path in
+* ``lookup``: membership in a reference set; compiled to ``IN`` for
+  literal sets (big dims go through the broadcast join path in
   ``dataset_rules``) (``src/data_validator.py:187-200``).
 
-Each compiler returns a Column that evaluates to an error struct
-(``field_name, field_value, error_type, error_message``) when the rule
-fails, else NULL; the validator packs them with ``array_compact``.
+Literals: a Spark SQL string literal treats ``\\`` as an escape, so
+``'^\\s*$'`` would parse as ``^s*$``. Every config-supplied string (regex
+pattern, description, lookup value, field name) renders through
+:func:`sql_string` as a raw literal, which keeps backslashes as written; a
+quote, which a raw literal cannot hold, is spliced in as ``char(39)``.
+Numeric bounds render as double literals (:func:`sql_double`).
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field as dc_field
 from typing import Any, Callable, Mapping, Optional
 
@@ -43,9 +58,15 @@ __all__ = [
     "ERROR_STRUCT_TYPE",
     "ERRORS_ARRAY_TYPE",
     "CompileContext",
+    "quote_ident",
+    "sql_string",
+    "sql_double",
+    "sql_concat",
     "error_struct",
     "compile_rule",
+    "field_errors_sql",
     "compile_field_errors",
+    "empty_errors_sql",
     "register_rule",
     "anchored",
 ]
@@ -84,14 +105,52 @@ class CompileContext:
     deferred_lookup_tables: frozenset = frozenset()
 
 
-def error_struct(field_name: str, value: Column, error_type: str, message: Column | str) -> Column:
-    msg = F.lit(message) if isinstance(message, str) else message
-    return F.struct(
-        F.lit(field_name).alias("field_name"),
-        value.cast("string").alias("field_value"),
-        F.lit(error_type).alias("error_type"),
-        msg.alias("error_message"),
+# ---------------------------------------------------------------------------
+# SQL text rendering
+# ---------------------------------------------------------------------------
+
+
+def quote_ident(name: str) -> str:
+    """A backquoted identifier for column ``name``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: str) -> str:
+    """A SQL expression that evaluates to the string ``s`` whatever the
+    parser's escaping confs: raw literals keep backslashes as written, and
+    each quote is spliced in as ``char(39)``."""
+    parts = [f"r'{p}'" for p in str(s).split("'")]
+    return parts[0] if len(parts) == 1 else "concat(" + ", char(39), ".join(parts) + ")"
+
+
+def sql_double(x: Any) -> str:
+    """A DOUBLE literal for ``x``."""
+    v = float(x)
+    if math.isfinite(v):
+        return f"{v!r}D"
+    return "CAST('NaN' AS DOUBLE)" if math.isnan(v) else f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+
+
+def sql_concat(*parts: str) -> str:
+    """``concat`` of SQL expressions."""
+    return "concat(" + ", ".join(parts) + ")"
+
+
+def error_struct(field_name: str, value_sql: str, error_type: str, message_sql: str) -> str:
+    """The one error-struct renderer, shared by the row rules and the
+    dataset rules: ``value_sql`` and ``message_sql`` are SQL expressions."""
+    return (
+        f"named_struct('field_name', {sql_string(field_name)}, "
+        f"'field_value', CAST({value_sql} AS STRING), "
+        f"'error_type', {sql_string(error_type)}, "
+        f"'error_message', {message_sql})"
     )
+
+
+def _case(*branches: tuple[str, str]) -> str:
+    """``CASE WHEN c THEN t ... END``: the first true condition wins, NULL
+    when none is."""
+    return "CASE " + " ".join(f"WHEN {c} THEN {t}" for c, t in branches) + " END"
 
 
 def anchored(pattern: str) -> str:
@@ -100,11 +159,11 @@ def anchored(pattern: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# individual rule compilers: (field, value Column, params, ctx) -> Column
-# (error struct when failing, NULL when passing)
+# individual rule compilers: (field, value SQL, params, ctx) -> SQL text
+# (error struct when failing, NULL when passing), or None for no check
 # ---------------------------------------------------------------------------
 
-RuleCompiler = Callable[[str, Column, Mapping[str, Any], CompileContext], Optional[Column]]
+RuleCompiler = Callable[[str, str, Mapping[str, Any], CompileContext], Optional[str]]
 _REGISTRY: dict[str, RuleCompiler] = {}
 
 
@@ -116,89 +175,78 @@ def register_rule(kind: str) -> Callable[[RuleCompiler], RuleCompiler]:
     return deco
 
 
+def _quoted_value_msg(fname: str, v: str, tail: str) -> str:
+    """``<fname>='<value>'<tail>`` — the reference's message shape."""
+    return sql_concat(sql_string(f"{fname}='"), f"CAST({v} AS STRING)", sql_string(f"'{tail}"))
+
+
+_BLANK = sql_string(r"^\s*$")
+
+
 @register_rule("not_null")
-def _not_null(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext) -> Column:
-    # rlike('^\s*$'), not trim()=='': F.trim strips only ASCII spaces, while
+def _not_null(fname: str, v: str, params: Mapping[str, Any], ctx: CompileContext) -> str:
+    # RLIKE '^\s*$', not trim()='': trim strips only ASCII spaces, while
     # the reference's str.strip() (src/data_validator.py:141) also rejects
     # tab/newline-only values
-    failing = c.isNull() | c.cast("string").rlike(r"^\s*$")
-    return F.when(failing, error_struct(fname, c, "NOT_NULL", f"{fname} cannot be null"))
+    failing = f"{v} IS NULL OR CAST({v} AS STRING) RLIKE {_BLANK}"
+    return _case((failing, error_struct(fname, v, "NOT_NULL", sql_string(f"{fname} cannot be null"))))
 
 
 @register_rule("range")
-def _range(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext) -> Column:
-    num = c.try_cast("double")
+def _range(fname: str, v: str, params: Mapping[str, Any], ctx: CompileContext) -> str:
+    num = f"try_cast({v} AS DOUBLE)"
     lo = params.get("min")
     hi = params.get("max")
     # numeric rendering: Python float(x) then str() => '300.0'; Spark
     # double->string matches for the magnitudes in play.
-    nums = num.cast("string")
-    expr = F.when(
-        num.isNull(),
-        error_struct(fname, c, "NUMERIC", F.concat(F.lit(f"{fname}='"), c.cast("string"), F.lit("' is not a valid number"))),
-    )
-    # NaN passes the bounds in the reference (float('nan') <|> bound is False
-    # in Python), but Spark orders NaN greater than everything — without this
-    # guard 'nan' would wrongly fall into the max branch.
-    expr = expr.when(F.isnan(num), F.lit(None).cast(ERROR_STRUCT_TYPE))
+    nums = f"CAST({num} AS STRING)"
+    branches = [
+        (f"{num} IS NULL", error_struct(fname, v, "NUMERIC", _quoted_value_msg(fname, v, " is not a valid number"))),
+        # NaN passes the bounds in the reference (float('nan') <|> bound is
+        # False in Python), but Spark orders NaN greater than everything —
+        # without this guard 'nan' would wrongly fall into the max branch.
+        (f"isnan({num})", "NULL"),
+    ]
     if lo is not None:
-        expr = expr.when(
-            num < F.lit(float(lo)),
-            error_struct(fname, c, "RANGE", F.concat(F.lit(f"{fname}="), nums, F.lit(f" below minimum {lo}"))),
-        )
+        msg = sql_concat(sql_string(f"{fname}="), nums, sql_string(f" below minimum {lo}"))
+        branches.append((f"{num} < {sql_double(lo)}", error_struct(fname, v, "RANGE", msg)))
     if hi is not None:
-        expr = expr.when(
-            num > F.lit(float(hi)),
-            error_struct(fname, c, "RANGE", F.concat(F.lit(f"{fname}="), nums, F.lit(f" exceeds maximum {hi}"))),
-        )
-    return expr
+        msg = sql_concat(sql_string(f"{fname}="), nums, sql_string(f" exceeds maximum {hi}"))
+        branches.append((f"{num} > {sql_double(hi)}", error_struct(fname, v, "RANGE", msg)))
+    return _case(*branches)
 
 
 @register_rule("regex")
-def _regex(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext) -> Optional[Column]:
+def _regex(fname: str, v: str, params: Mapping[str, Any], ctx: CompileContext) -> Optional[str]:
     pattern = params.get("pattern")
     if not pattern:
         return None
     desc = params.get("description", f"match pattern {pattern}")
-    failing = ~c.cast("string").rlike(anchored(pattern))
-    return F.when(
-        failing,
-        error_struct(
-            fname,
-            c,
-            "REGEX",
-            F.concat(F.lit(f"{fname}='"), c.cast("string"), F.lit(f"' does not match required format: {desc}")),
-        ),
-    )
+    failing = f"NOT (CAST({v} AS STRING) RLIKE {sql_string(anchored(pattern))})"
+    msg = _quoted_value_msg(fname, v, f" does not match required format: {desc}")
+    return _case((failing, error_struct(fname, v, "REGEX", msg)))
 
 
 @register_rule("date_range")
-def _date_range(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext) -> Column:
-    ts = F.coalesce(
-        F.try_to_timestamp(c.cast("string")),
-        F.try_to_timestamp(c.cast("string"), F.lit("yyyy-MM-dd")),
-    )
-    expr = F.when(
-        ts.isNull(),
-        error_struct(fname, c, "DATE_FORMAT", F.concat(F.lit(f"{fname}='"), c.cast("string"), F.lit("' is not a valid date"))),
-    )
+def _date_range(fname: str, v: str, params: Mapping[str, Any], ctx: CompileContext) -> str:
+    s = f"CAST({v} AS STRING)"
+    ts = f"coalesce(try_to_timestamp({s}), try_to_timestamp({s}, 'yyyy-MM-dd'))"
+    branches = [
+        (f"{ts} IS NULL", error_struct(fname, v, "DATE_FORMAT", _quoted_value_msg(fname, v, " is not a valid date"))),
+    ]
     lo = params.get("min")
     hi = params.get("max")
     if lo:
-        expr = expr.when(
-            ts < F.to_timestamp(F.lit(lo)),
-            error_struct(fname, c, "DATE_RANGE", f"{fname} date before minimum {lo}"),
-        )
+        msg = sql_string(f"{fname} date before minimum {lo}")
+        branches.append((f"{ts} < to_timestamp({sql_string(lo)})", error_struct(fname, v, "DATE_RANGE", msg)))
     if hi:
-        expr = expr.when(
-            ts > F.to_timestamp(F.lit(hi)),
-            error_struct(fname, c, "DATE_RANGE", f"{fname} date after maximum {hi}"),
-        )
-    return expr
+        msg = sql_string(f"{fname} date after maximum {hi}")
+        branches.append((f"{ts} > to_timestamp({sql_string(hi)})", error_struct(fname, v, "DATE_RANGE", msg)))
+    return _case(*branches)
 
 
 @register_rule("lookup")
-def _lookup(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext) -> Optional[Column]:
+def _lookup(fname: str, v: str, params: Mapping[str, Any], ctx: CompileContext) -> Optional[str]:
     table = params.get("table", "")
     column = params.get("column", "")
     # Key resolution order: fully-qualified "table.column", then bare column
@@ -211,7 +259,7 @@ def _lookup(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContex
         if table in ctx.deferred_lookup_tables:
             # A referential-integrity rule / dim table is configured for
             # this table: dataset_rules.referential_check (broadcast
-            # anti-join) owns the validation; per-row compilation has
+            # join) owns the validation; per-row compilation has
             # nothing to check.
             return None
         if ctx.strict_lookup:
@@ -231,35 +279,65 @@ def _lookup(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContex
             stacklevel=2,
         )
         return None
-    vals = sorted(str(v) for v in values)
-    failing = ~c.cast("string").isin(vals)
-    return F.when(
-        failing,
-        error_struct(
-            fname,
-            c,
-            "LOOKUP",
-            F.concat(F.lit(f"{fname}='"), c.cast("string"), F.lit(f"' not found in {table}")),
-        ),
-    )
+    vals = sorted(str(x) for x in values)
+    # an empty set admits nothing (`x IN ()` does not parse)
+    member = f"CAST({v} AS STRING) IN ({', '.join(sql_string(x) for x in vals)})" if vals else "false"
+    msg = _quoted_value_msg(fname, v, f" not found in {table}")
+    return _case((f"NOT ({member})", error_struct(fname, v, "LOOKUP", msg)))
 
 
-def compile_rule(fname: str, c: Column, kind: str, params: Mapping[str, Any], ctx: CompileContext) -> Optional[Column]:
-    """Compile a single rule; unknown kinds return None — matching the
-    reference's silent fall-through for undispatched rule types
-    (``src/data_validator.py:202``). Window/dataset-scoped kinds
-    (``unique``, ``outlier_detection``) are handled in ``dataset_rules``."""
+def compile_rule(fname: str, value_sql: str, kind: str, params: Mapping[str, Any], ctx: CompileContext) -> Optional[str]:
+    """Compile a single rule over the SQL expression ``value_sql``; unknown
+    kinds return None — matching the reference's silent fall-through for
+    undispatched rule types (``src/data_validator.py:202``).
+    Window/dataset-scoped kinds (``unique``, ``outlier_detection``) are
+    handled in ``dataset_rules``."""
     fn = _REGISTRY.get(kind)
     if fn is None:
         return None
-    return fn(fname, c, params, ctx)
+    return fn(fname, value_sql, params, ctx)
 
 
-def missing_test(c: Column, dtype: T.DataType) -> Column:
+def missing_test(v: str, dtype: T.DataType) -> str:
     """pandas ``pd.isna`` analogue: NULL, plus NaN for floating columns."""
     if isinstance(dtype, (T.DoubleType, T.FloatType)):
-        return c.isNull() | F.isnan(c)
-    return c.isNull()
+        return f"({v} IS NULL OR isnan({v}))"
+    return f"{v} IS NULL"
+
+
+def empty_errors_sql() -> str:
+    """A typed empty errors array."""
+    return f"CAST(array() AS {ERRORS_ARRAY_TYPE.simpleString()})"
+
+
+def field_errors_sql(
+    fname: str,
+    value_sql: str,
+    dtype: T.DataType,
+    required: bool,
+    rules,
+    ctx: CompileContext,
+) -> str:
+    """SQL text of the errors array for one field, reproducing the
+    reference's control flow (``src/data_validator.py:106-135``):
+    required-missing short-circuits, optional-missing skips, otherwise
+    every rule runs and each failing rule contributes one error struct."""
+    missing = missing_test(value_sql, dtype)
+    entries: list[str] = []
+    if required:
+        msg = sql_string(f"Required field '{fname}' is empty")
+        entries.append(_case((missing, error_struct(fname, value_sql, "REQUIRED_FIELD_MISSING", msg))))
+    for rule in rules:
+        compiled = compile_rule(fname, value_sql, rule.kind, rule.params, ctx)
+        if compiled is not None:
+            entries.append(_case((f"NOT ({missing})", compiled)))
+    if not entries:
+        return empty_errors_sql()
+    return f"array_compact(array({', '.join(entries)}))"
+
+
+# The lambda variable compile_field_errors binds its value Column to.
+_BOUND = "__value"
 
 
 def compile_field_errors(
@@ -270,25 +348,8 @@ def compile_field_errors(
     rules,
     ctx: CompileContext,
 ) -> Column:
-    """Errors array for one field, reproducing the reference's control flow
-    (``src/data_validator.py:106-135``): required-missing short-circuits,
-    optional-missing skips, otherwise every rule runs and each failing rule
-    contributes one error struct."""
-    missing = missing_test(c, dtype)
-    entries: list[Column] = []
-    if required:
-        entries.append(
-            F.when(
-                missing,
-                error_struct(fname, c, "REQUIRED_FIELD_MISSING", f"Required field '{fname}' is empty"),
-            )
-        )
-    present = ~missing
-    for rule in rules:
-        compiled = compile_rule(fname, c, rule.kind, rule.params, ctx)
-        if compiled is not None:
-            entries.append(F.when(present, compiled))
-    if not entries:
-        # typed empty array (cannot use F.array() — array<void> won't concat)
-        return F.slice(F.array(error_struct(fname, c, "", "")), 1, 0)
-    return F.array_compact(F.array(*entries))
+    """:func:`field_errors_sql` as a Column over any value Column ``c``:
+    the text is parsed as a lambda that a one-element ``transform`` applies
+    to ``c``. The validator renders over the column reference directly."""
+    body = field_errors_sql(fname, _BOUND, dtype, required, rules, ctx)
+    return F.call_function("transform", F.array(c), F.expr(f"{_BOUND} -> {body}"))[0]

@@ -5,27 +5,33 @@ Replaces the reference's ``DataValidator.validate_dataframe``
 
 1. column-presence check against ``df.columns`` on the driver — whole-file
    rejection before any job launches (reference ``:96-104``);
-2. one ``select`` appends ``errors: array<struct>`` built from the compiled
-   per-field rule expressions (``plans.rules``);
+2. every row rule renders to SQL text (``plans.rules``), one errors array
+   per field;
 3. dataset rules (duplicate_check; extensions: unique-daily, zscore,
-   referential) append further error structs (``plans.dataset_rules``);
-4. the valid/invalid split is one predicate and its complement
+   referential) add *fact* columns to the raw rows — window counts over one
+   shared exchange, broadcast-joined stats and markers
+   (``plans.dataset_rules``);
+4. ``errors: array<struct>`` is built once, after the facts, from one
+   parsed SQL expression (a second one carries duplicate_check's
+   "not already invalid" prefix);
+5. the valid/invalid split is one predicate and its complement
    (``size(errors) == 0``), and the error report is an ``explode``.
 
-No ``collect``, no Python UDFs, no row iteration — the full pass is
-whole-stage-codegen'd and scales with partitions.
+No ``collect``, no Python UDFs, no row iteration; the pass scales with
+partitions. The errors projection runs outside whole-stage codegen, because
+``array_compact`` is an interpreted lambda filter (see ``plans.rules``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Iterable, Mapping, Optional
+from typing import Any, Mapping, Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..config import FieldMapping, GlobalRule, IntegrationConfig
+from ..config import IntegrationConfig
 from . import dataset_rules
-from .rules import CompileContext, compile_field_errors
+from .rules import CompileContext, empty_errors_sql, field_errors_sql, quote_ident
 
 __all__ = ["ValidationResult", "annotate_errors", "validate", "with_row_index"]
 
@@ -89,6 +95,10 @@ def annotate_errors(
     stats) to sub-universes — pass the file-lineage column when a glob was
     read as one DataFrame, reproducing the reference's per-file loop. If
     omitted, the ``FileSource`` lineage column is picked up automatically.
+
+    The result is ``df``'s columns in source order plus ``errors``. Entries
+    appear in rule order: row rules field by field, then the per-field
+    dataset rules (unique, outlier), then the global rules as configured.
     """
     check_columns(df, config)
     if scope_cols is None:
@@ -106,50 +116,71 @@ def annotate_errors(
         deferred_lookup_tables=deferred,
     )
     schema = {f.name: f.dataType for f in df.schema.fields}
-
-    field_arrays = [
-        compile_field_errors(m.source, F.col(m.source), schema[m.source], m.required, m.rules, ctx)
+    row_arrays = [
+        field_errors_sql(m.source, quote_ident(m.source), schema[m.source], m.required, m.rules, ctx)
         for m in config.fields
     ]
-    if not field_arrays:
-        # config with zero FieldMappings: every row is valid (typed empty array)
-        from .rules import ERRORS_ARRAY_TYPE
+    rules = _dataset_rules(df, config, ctx, dim_tables or {}, scope_cols)
 
-        errors_col = F.lit(None).cast(ERRORS_ARRAY_TYPE)
-        errors_col = F.coalesce(errors_col, F.array().cast(ERRORS_ARRAY_TYPE))
-    elif len(field_arrays) == 1:
-        errors_col = field_arrays[0]
-    else:
-        errors_col = F.concat(*field_arrays)
-    out = df.withColumn(ERRORS, errors_col)
+    out = dataset_rules.with_facts(df, rules, scope_cols)
+    # errors is built once, after every fact exists: the row arrays, then
+    # each dataset rule's entry. A clean-rows-only entry (duplicate_check)
+    # sees the entries before it through a projected prefix.
+    arrays, entries = row_arrays, []
+    for r in rules:
+        if r.clean_rows_only:
+            out = out.withColumn(ERRORS, F.expr(_concat_errors(arrays, entries)))
+            arrays, entries = [ERRORS], [f"CASE WHEN size({ERRORS}) = 0 THEN {r.error} END"]
+        else:
+            entries.append(r.error)
+    keep = [quote_ident(c) for c in df.columns if c != ERRORS]
+    return out.selectExpr(*keep, f"{_concat_errors(arrays, entries)} AS {ERRORS}")
 
-    # --- dataset-scoped per-field rules (declared-only in reference) ---
-    if extensions:
+
+def _concat_errors(arrays: list[str], entries: list[str]) -> str:
+    """SQL text of the errors arrays ``arrays`` followed by the nullable
+    error structs ``entries``."""
+    parts = arrays + ([f"array_compact(array({', '.join(entries)}))"] if entries else [])
+    if not parts:
+        return empty_errors_sql()
+    return parts[0] if len(parts) == 1 else f"concat({', '.join(parts)})"
+
+
+def _dataset_rules(
+    df: DataFrame,
+    config: IntegrationConfig,
+    ctx: CompileContext,
+    dim_tables: Mapping[str, DataFrame],
+    scope_cols: list[str],
+) -> list[dataset_rules.DatasetRule]:
+    """The config's dataset rules in error order: per-field extension rules
+    (declared-only in the reference) field by field, then global rules."""
+    rules = []
+    if ctx.extensions:
         ts_field = ctx.timestamp_field
         for m in config.fields:
             for rule in m.rules:
                 if rule.kind == "unique" and rule.params.get("scope") == "daily" and ts_field:
-                    out = dataset_rules.unique_within_day(out, m.source, ts_field, scope_cols)
+                    rules.append(dataset_rules.unique_within_day(m.source, ts_field, scope_cols))
                 elif rule.kind == "outlier_detection" and rule.params.get("method", "zscore") == "zscore":
-                    out = dataset_rules.zscore_outlier_check(
-                        out, m.source, float(rule.params.get("threshold", 3.0)),
-                        partition_by=scope_cols or None,
+                    rules.append(
+                        dataset_rules.zscore_outlier_check(
+                            df, m.source, float(rule.params.get("threshold", 3.0)),
+                            partition_by=scope_cols or None,
+                        )
                     )
-
-    # --- global rules ---
     for g in config.global_rules:
         if g.kind == "duplicate_check":
             keys = [s.strip() for s in str(g.params.get("fields", "")).split(",") if s.strip()]
             if keys:
-                out = dataset_rules.duplicate_check(out, keys, scope_cols)
-        elif g.kind == "referential_integrity" and extensions:
+                rules.append(dataset_rules.duplicate_check(keys, scope_cols))
+        elif g.kind == "referential_integrity" and ctx.extensions:
             fk = g.params.get("foreignKey", "")
             table = g.params.get("foreignTable", "")
-            dim = (dim_tables or {}).get(table)
+            dim = dim_tables.get(table)
             if fk and dim is not None:
-                out = dataset_rules.referential_check(out, fk, dim, foreign_table=table)
-
-    return out
+                rules.append(dataset_rules.referential_check(fk, dim, foreign_table=table))
+    return rules
 
 
 def validate(

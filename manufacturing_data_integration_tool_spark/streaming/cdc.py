@@ -25,7 +25,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.merge import merge_upsert
-from .sketches import _open_state, _swap_in
+from .sketches import _open_state, _stream_id, _swap_in
 
 __all__ = ["apply_cdc_stream"]
 
@@ -81,7 +81,7 @@ def apply_cdc_stream(
         merged = merge_upsert(target, latest, keys, delete_col=delete_col)
         # materialize BEFORE touching the snapshot dir (the plan reads it)
         merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(snap, staging, backup, batch_id)
+        _swap_in(snap, staging, backup, batch_id, _stream_id(batch))
 
     writer = (
         changes.writeStream.foreachBatch(process_batch)

@@ -14,12 +14,16 @@ Replay safety (r7): ``foreachBatch`` is at-least-once — a crash after
 the staging->target swap but BEFORE the checkpoint offset commit
 replays the same ``batch_id`` on restart. Summation merges (CMS cells,
 OEE counts) would double-count that batch, so every accumulator
-persists the last-applied ``batch_id`` in a ``_LAST_BATCH_ID`` marker
-INSIDE the swapped directory (atomic with the state it describes) and
+persists the last-applied ``batch_id`` in a ``_LAST_BATCH_ID`` marker,
+and the id of the stream that applied it in a ``_STREAM_ID`` marker,
+INSIDE the swapped directory (atomic with the state it describes), and
 makes ``process_batch`` a no-op when the incoming id has already been
-folded — mirroring the ``batch=<id>`` overwrite idempotence used in
-``dedup_index.py``. Bloom's ``bit_or`` merge is idempotent anyway; it
-carries the marker for uniformity.
+folded by the same stream — mirroring the ``batch=<id>`` overwrite
+idempotence used in ``dedup_index.py``. Batch ids count per checkpoint:
+a stream started on a new checkpoint over existing state begins again at
+batch 0 with new data, and the stream-id check lets it through. Bloom's
+``bit_or`` merge is idempotent anyway; it carries the markers for
+uniformity.
 
 100 TB posture: the persisted state is ``depth * width`` cells — KBs —
 so unlike a CDC snapshot merge (rewrite scales with the snapshot) every
@@ -40,18 +44,27 @@ from ..ops.text import countmin_sketch
 __all__ = ["accumulate_countmin_stream", "accumulate_bloom_stream", "accumulate_kmv_stream", "accumulate_oee_stream", "oee_from_state"]
 
 _MARKER = "_LAST_BATCH_ID"
+_STREAM_MARKER = "_STREAM_ID"
 
 
-def _already_applied(target: Path, batch_id: int) -> bool:
-    """True iff this batch_id (or a later one) is already folded into the
-    state at ``target``. foreachBatch ids are monotonically increasing and
-    a replay redelivers the SAME id, so ``<=`` covers both the exact-replay
-    window and any marker-ahead-of-checkpoint race."""
-    marker = target / _MARKER
-    if not marker.exists():
-        return False
+def _stream_id(batch: DataFrame) -> str:
+    """The id of the stream delivering ``batch``. Spark keeps it in
+    ``<checkpointLocation>/metadata``, so it names the checkpoint, and sets
+    it as a local property of the thread that runs each micro-batch."""
+    return batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId") or ""
+
+
+def _already_applied(target: Path, batch_id: int, stream_id: str) -> bool:
+    """True iff stream ``stream_id`` already folded this batch_id (or a
+    later one) into the state at ``target``. Within one checkpoint
+    foreachBatch ids increase monotonically and a replay redelivers the
+    SAME id, so ``<=`` covers both the exact-replay window and any
+    marker-ahead-of-checkpoint race. Another stream's ids say nothing
+    about this one's batches."""
     try:
-        return batch_id <= int(marker.read_text().strip())
+        if (target / _STREAM_MARKER).read_text().strip() != stream_id:
+            return False
+        return batch_id <= int((target / _MARKER).read_text().strip())
     except (ValueError, OSError):
         return False
 
@@ -72,14 +85,15 @@ def _open_state(path: str) -> tuple[Path, Path, Path]:
     return target, staging, backup
 
 
-def _swap_in(target: Path, staging: Path, backup: Path, batch_id: int) -> None:
-    """Write the batch-id marker into staging, then rename-swap staging
-    into place. The marker travels inside the swapped directory, so state
-    and last-applied id are atomic: readers (and the replay guard) see
-    either the old pair or the new pair, never a mix. The one swap of
-    every state directory in this package: the four accumulators here and
-    ``cdc.apply_cdc_stream``."""
+def _swap_in(target: Path, staging: Path, backup: Path, batch_id: int, stream_id: str) -> None:
+    """Write the batch-id and stream-id markers into staging, then
+    rename-swap staging into place. The markers travel inside the swapped
+    directory, so state and last-applied id are atomic: readers (and the
+    replay guard) see either the old state or the new one, never a mix.
+    The one swap of every state directory in this package: the four
+    accumulators here and ``cdc.apply_cdc_stream``."""
     (staging / _MARKER).write_text(str(batch_id))
+    (staging / _STREAM_MARKER).write_text(stream_id)
     if backup.exists():
         shutil.rmtree(backup)
     if target.exists():
@@ -116,7 +130,8 @@ def accumulate_countmin_stream(
     target, staging, backup = _open_state(sketch_path)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if _already_applied(target, batch_id):
+        stream_id = _stream_id(batch)
+        if _already_applied(target, batch_id, stream_id):
             return  # at-least-once replay of a batch already folded
         spark = batch.sparkSession
         delta = countmin_sketch(batch, text_col, depth=depth, width=width)
@@ -131,7 +146,7 @@ def accumulate_countmin_stream(
             merged = delta
         # materialize BEFORE touching the live dir (the plan reads it)
         merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(target, staging, backup, batch_id)
+        _swap_in(target, staging, backup, batch_id, stream_id)
 
     writer = (
         docs.writeStream.foreachBatch(process_batch)
@@ -172,7 +187,8 @@ def accumulate_bloom_stream(
     target, staging, backup = _open_state(filter_path)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if _already_applied(target, batch_id):
+        stream_id = _stream_id(batch)
+        if _already_applied(target, batch_id, stream_id):
             return  # replay no-op (bit_or is idempotent; skip is cheaper)
         spark = batch.sparkSession
         delta = bloom_build(batch, key_col, m_words=m_words, k=k, salt=salt)
@@ -186,7 +202,7 @@ def accumulate_bloom_stream(
         else:
             merged = delta
         merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(target, staging, backup, batch_id)
+        _swap_in(target, staging, backup, batch_id, stream_id)
 
     writer = (
         keys.writeStream.foreachBatch(process_batch)
@@ -249,7 +265,8 @@ def accumulate_oee_stream(
         )
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if _already_applied(target, batch_id):
+        stream_id = _stream_id(batch)
+        if _already_applied(target, batch_id, stream_id):
             return  # at-least-once replay of a batch already folded
         spark = batch.sparkSession
         delta = day_delta(batch)
@@ -267,7 +284,7 @@ def accumulate_oee_stream(
         else:
             merged = delta
         merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(target, staging, backup, batch_id)
+        _swap_in(target, staging, backup, batch_id, stream_id)
 
     writer = (
         events.writeStream.foreachBatch(process_batch)
@@ -356,7 +373,8 @@ def accumulate_kmv_stream(
     target, staging, backup = _open_state(sketch_path)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if _already_applied(target, batch_id):
+        stream_id = _stream_id(batch)
+        if _already_applied(target, batch_id, stream_id):
             return  # min-merge is idempotent; skip the rewrite anyway
         spark = batch.sparkSession
         h = F.conv(
@@ -381,7 +399,7 @@ def accumulate_kmv_stream(
             merged = delta
         # materialize BEFORE touching the live dir (the plan reads it)
         merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(target, staging, backup, batch_id)
+        _swap_in(target, staging, backup, batch_id, stream_id)
 
     writer = (
         rows.writeStream.foreachBatch(process_batch)

@@ -179,3 +179,31 @@ def test_duplicate_check_keep_false_and_already_invalid_guard(spark):
     # invalid so no DUPLICATE is appended (reference guard)
     assert sorted(errs) == [("1", "DUPLICATE"), ("2", "DUPLICATE"), ("4", "REGEX"), ("5", "REGEX")]
     assert res.valid.count() == 1
+
+
+def test_rules_render_backslashes_quotes_and_bounds_exactly(spark):
+    """Rules reach Spark as SQL text. A backslash in a pattern must stay a
+    regex escape (a plain SQL literal would eat it: '^\\d$' -> '^d$'); a
+    quote in a pattern, description, lookup value or column name must not
+    end the literal; bounds keep their double value."""
+    cfg = mk_cfg(
+        FieldMapping("line id", "L", "varchar", True, (Rule("regex", {"pattern": r"^LINE\d{3}$", "description": r"it's LINE\d"}),)),
+        FieldMapping("name", "N", "varchar", True, (Rule("regex", {"pattern": "^O'[A-Z]+$"}),)),
+        FieldMapping("code", "C", "varchar", True, (Rule("lookup", {"table": "T", "column": "C"}),)),
+        FieldMapping("x", "X", "float", True, (Rule("range", {"min": -0.5, "max": 1e20}),)),
+    )
+    df = spark.createDataFrame(
+        [("LINE001", "O'NEIL", "O'Brien", "1e19"), ("LINEabc", "ONEIL", "x", "2e20"), ("LINEd", "O'N", r"a\b", "-0.6")],
+        "`line id` string, name string, code string, x string",
+    )
+    res = validate(df, cfg, lookup_values={"T.C": {"O'Brien", r"a\b"}})
+    errs = sorted((r["line id"], r.field_name, r.error_type, r.error_message) for r in res.errors.collect())
+    assert errs == [
+        ("LINEabc", "code", "LOOKUP", "code='x' not found in T"),
+        ("LINEabc", "line id", "REGEX", "line id='LINEabc' does not match required format: it's LINE\\d"),
+        ("LINEabc", "name", "REGEX", "name='ONEIL' does not match required format: match pattern ^O'[A-Z]+$"),
+        ("LINEabc", "x", "RANGE", "x=2.0E20 exceeds maximum 1e+20"),
+        ("LINEd", "line id", "REGEX", "line id='LINEd' does not match required format: it's LINE\\d"),
+        ("LINEd", "x", "RANGE", "x=-0.6 below minimum -0.5"),
+    ]
+    assert res.valid.count() == 1

@@ -551,11 +551,11 @@ def test_streaming_countmin_accumulates_to_batch_sketch(spark, tmp_path):
 
 def test_streaming_countmin_replay_is_noop(spark, tmp_path):
     """At-least-once replay safety (r7): a crash after the staging->target
-    swap but before the checkpoint offset commit replays the same batch_id
-    on restart. Simulate the worst case — checkpoint wiped entirely, every
-    batch redelivered with its original id — and assert the summation-merge
-    state is NOT double-counted: the _LAST_BATCH_ID marker makes every
-    replayed batch a no-op."""
+    swap but before the checkpoint commit replays the same batch_id on
+    restart. Simulate it by deleting the checkpoint's last commit entry and
+    restarting on the same checkpoint: Spark re-runs batch 0 with its
+    original id, and the summation-merge state must NOT be double-counted —
+    the _LAST_BATCH_ID marker makes the replayed batch a no-op."""
     from manufacturing_data_integration_tool_spark.ops.text import countmin_sketch
     from manufacturing_data_integration_tool_spark.streaming.sketches import (
         accumulate_countmin_stream,
@@ -566,21 +566,73 @@ def test_streaming_countmin_replay_is_noop(spark, tmp_path):
     base = spark.createDataFrame(rows, "doc_id long, text string")
     base.coalesce(1).write.parquet(str(src))
     sketch_dir = tmp_path / "rp_state"
+    ckpt = tmp_path / "rp_ckpt"
 
-    def run(ckpt):
+    def run():
         q = accumulate_countmin_stream(
             spark.readStream.schema(base.schema).parquet(str(src)),
             str(sketch_dir),
             depth=4,
             width=64,
-            checkpoint_dir=str(tmp_path / ckpt),
+            checkpoint_dir=str(ckpt),
         )
         q.awaitTermination(120)
         if q.isActive:
             q.stop()
+        return q
 
-    run("rp_ckpt1")
-    state1 = {
+    def state():
+        return {
+            (r["row"], r["col"]): r["cnt"]
+            for r in spark.read.parquet(str(sketch_dir)).collect()
+        }
+
+    run()
+    want = {
+        (r["row"], r["col"]): r["cnt"]
+        for r in countmin_sketch(base, "text", depth=4, width=64).collect()
+    }
+    assert state() == want
+    # the crash: batch 0 swapped in, its commit (and checksum) never written
+    for f in ("0", ".0.crc"):
+        (ckpt / "commits" / f).unlink(missing_ok=True)
+    replayed = run()
+    assert replayed.lastProgress is not None and replayed.lastProgress["batchId"] == 0
+    assert state() == want
+    marker = sketch_dir / "_LAST_BATCH_ID"
+    assert marker.exists() and marker.read_text().strip() == "0"
+
+
+def test_streaming_countmin_new_checkpoint_folds_new_batches(spark, tmp_path):
+    """Batch ids count per checkpoint. A stream started on a new checkpoint
+    over an existing state begins again at batch 0 with new data; the
+    replay guard must not mistake those batches for replays of the old
+    stream's. File A through checkpoint 1, then file B through checkpoint 2,
+    must leave the sketch of A and B together."""
+    from manufacturing_data_integration_tool_spark.ops.text import countmin_sketch
+    from manufacturing_data_integration_tool_spark.streaming.sketches import (
+        accumulate_countmin_stream,
+    )
+
+    base = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma"), (3, "delta delta epsilon")],
+        "doc_id long, text string",
+    )
+    sketch_dir = tmp_path / "nc_state"
+    for name, ids in (("a", (1, 2)), ("b", (3,))):
+        src = tmp_path / f"nc_in_{name}"
+        base.filter(F.col("doc_id").isin(*ids)).coalesce(1).write.parquet(str(src))
+        q = accumulate_countmin_stream(
+            spark.readStream.schema(base.schema).parquet(str(src)),
+            str(sketch_dir),
+            depth=4,
+            width=64,
+            checkpoint_dir=str(tmp_path / f"nc_ckpt_{name}"),
+        )
+        q.awaitTermination(120)
+        if q.isActive:
+            q.stop()
+    got = {
         (r["row"], r["col"]): r["cnt"]
         for r in spark.read.parquet(str(sketch_dir)).collect()
     }
@@ -588,17 +640,7 @@ def test_streaming_countmin_replay_is_noop(spark, tmp_path):
         (r["row"], r["col"]): r["cnt"]
         for r in countmin_sketch(base, "text", depth=4, width=64).collect()
     }
-    assert state1 == want
-    # fresh checkpoint over the same input = batch 0 redelivered with the
-    # same id; without the marker guard this would double every cell
-    run("rp_ckpt2")
-    state2 = {
-        (r["row"], r["col"]): r["cnt"]
-        for r in spark.read.parquet(str(sketch_dir)).collect()
-    }
-    assert state2 == want
-    marker = sketch_dir / "_LAST_BATCH_ID"
-    assert marker.exists() and marker.read_text().strip() == "0"
+    assert got == want
 
 
 def test_streaming_countmin_recovers_from_crash_mid_swap(spark, tmp_path):
@@ -1080,9 +1122,12 @@ def test_streaming_kmv_replay_is_noop(spark, tmp_path):
         )
         # simulate an at-least-once redelivery of batch 0
         marker = int((target / sk._MARKER).read_text())
+        stream = (target / sk._STREAM_MARKER).read_text()
         # re-invoke the guard directly: already-applied id short-circuits
-        assert sk._already_applied(target, marker)
-        assert not sk._already_applied(target, marker + 1)
+        assert sk._already_applied(target, marker, stream)
+        assert not sk._already_applied(target, marker + 1, stream)
+        # the same id from another checkpoint's stream is new data
+        assert not sk._already_applied(target, marker, stream + "-other")
         after = sorted(
             r["h"] for r in spark.read.parquet(str(target)).collect()
         )
