@@ -1,5 +1,5 @@
 from .rules import CompileContext, ERROR_STRUCT_TYPE, ERRORS_ARRAY_TYPE, compile_rule, register_rule
-from .validator import ValidationResult, annotate_errors, validate, with_row_index
+from .validator import ValidationResult, annotate_errors, validate
 from . import dataset_rules
 
 __all__ = [
@@ -11,6 +11,5 @@ __all__ = [
     "ValidationResult",
     "annotate_errors",
     "validate",
-    "with_row_index",
     "dataset_rules",
 ]

@@ -27,13 +27,13 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Any, Mapping, Optional
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..config import IntegrationConfig
 from . import dataset_rules
 from .rules import CompileContext, empty_errors_sql, field_errors_sql, quote_ident
 
-__all__ = ["ValidationResult", "annotate_errors", "validate", "with_row_index"]
+__all__ = ["ValidationResult", "annotate_errors", "validate"]
 
 ERRORS = "errors"
 
@@ -54,23 +54,6 @@ class ValidationResult:
     valid: DataFrame  # errors == [] (errors column dropped)
     invalid: DataFrame  # errors != [] (errors column kept)
     errors: DataFrame  # exploded error report (one row per error)
-
-
-def with_row_index(df: DataFrame, order_by: Optional[list[str]] = None, name: str = "row_index") -> DataFrame:
-    """Deterministic row index when an ordering exists; otherwise a
-    partition-stable id. pandas row indices are file order — at distributed
-    scale "file order" is only meaningful per file, so error reports should
-    be keyed on natural columns; this helper exists for compat/tests.
-
-    .. warning:: The ``order_by`` form is an UNPARTITIONED global-sort
-       window — every row funnels through ONE task. It exists solely so the
-       9-row golden fixture can reproduce the reference's pandas row
-       numbering byte-for-byte. Never call it from a pipeline or query
-       path; nothing in the production surface does."""
-    if order_by:
-        w = Window.orderBy(*[F.col(c) for c in order_by])
-        return df.withColumn(name, F.row_number().over(w) - 1)
-    return df.withColumn(name, F.monotonically_increasing_id())
 
 
 def check_columns(df: DataFrame, config: IntegrationConfig) -> None:
@@ -190,14 +173,13 @@ def validate(
     lookup_values: Optional[Mapping[str, Any]] = None,
     dim_tables: Optional[Mapping[str, DataFrame]] = None,
     extensions: bool = False,
-    id_columns: Optional[list[str]] = None,
     scope_cols: Optional[list[str]] = None,
     strict_lookup: bool = True,
 ) -> ValidationResult:
     """Full validation pass -> (annotated, valid, invalid, errors report).
 
-    ``id_columns`` restricts the error report's carried row identity; by
-    default every source column is kept alongside the exploded error.
+    The error report carries every source column alongside the exploded
+    error.
     """
     annotated = annotate_errors(
         df, config, lookup_values=lookup_values, dim_tables=dim_tables,
@@ -208,7 +190,7 @@ def validate(
     valid = annotated.filter(~has_errors).drop(ERRORS)
     invalid = annotated.filter(has_errors)
 
-    carry = id_columns if id_columns else [c for c in df.columns]
+    carry = df.columns
     err = F.explode(F.col(ERRORS)).alias("error")
     errors = invalid.select(*carry, err).select(
         *carry,

@@ -16,16 +16,25 @@ to a table format whose MERGE does file-level pruning with the SAME
 merge_upsert semantics). The merge itself stays ONE full-outer join per
 batch, AQE-skew-safe, with the change batch on the (usually broadcast-
 small) side.
+
+The per-batch body is ``sketches.fold_stream``, the one fold-and-swap path
+of this package: the replay guard, the staging write and the rename swap
+(with its crash-mid-swap restore) are shared with the sketch accumulators.
+CDC consults the ``_LAST_BATCH_ID`` marker like every other state
+update; its keyed merge is idempotent, so skipping a replayed batch leaves
+the snapshot the replay would have written.
 """
 
 from __future__ import annotations
 
+from pathlib import Path
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.merge import merge_upsert
-from .sketches import _open_state, _stream_id, _swap_in
+from .sketches import fold_stream
 
 __all__ = ["apply_cdc_stream"]
 
@@ -37,10 +46,10 @@ def apply_cdc_stream(
     *,
     checkpoint_dir: str,
     delete_col: Optional[str] = None,
-    trigger_available_now: bool = True,
-):
-    """Start a stream applying ``changes`` onto the parquet snapshot at
-    ``snapshot_path`` with MERGE semantics (update / delete / insert).
+) -> StreamingQuery:
+    """Start a stream applying ``changes`` onto the existing parquet
+    snapshot at ``snapshot_path`` with MERGE semantics (update / delete /
+    insert), draining the input present at start.
 
     Each micro-batch: dedupe the batch to the LAST change per key (a batch
     can carry several changes for one key; later wins, ordered by the
@@ -48,45 +57,33 @@ def apply_cdc_stream(
     deterministic via a monotonic id), merge into the current snapshot,
     write to a staging directory, atomically swap. The swap is
     rename-based — readers see the old or the new snapshot, never a
-    partial write — and shared with the sketch accumulators, so a crash
-    between its two renames is undone when the stream restarts and the
-    replayed batch re-applies onto the previous snapshot. A merge batch
-    is idempotent, so the swap's batch-id marker is not consulted here.
-
-    Returns the StreamingQuery. ``trigger_available_now`` drains pending
-    input then stops (the batch-refresh mode); pass False for a
-    continuous micro-batch stream.
+    partial write — so a crash between its two renames is undone when the
+    stream restarts and the replayed batch re-applies onto the previous
+    snapshot. A batch with no columns is skipped; a missing snapshot
+    fails the batch.
     """
-    snap, staging, backup = _open_state(snapshot_path)
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark: SparkSession = batch.sparkSession
+    def latest_changes(batch: DataFrame) -> Optional[DataFrame]:
         if not batch.columns:
-            return
-        from pyspark.sql import Window, functions as F
-
+            return None
+        if not Path(snapshot_path).exists():
+            raise FileNotFoundError(f"CDC snapshot {snapshot_path} does not exist")
         # last-change-per-key within the batch: deterministic via the
         # source ordering column when supplied, else monotonic id
-        order_col = "__seq" if "__seq" in batch.columns else None
-        b = batch if order_col else batch.withColumn(
+        b = batch if "__seq" in batch.columns else batch.withColumn(
             "__seq", F.monotonically_increasing_id()
         )
         w = Window.partitionBy(*keys).orderBy(F.desc("__seq"))
-        latest = (
+        return (
             b.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn", "__seq")
         )
-        target = spark.read.parquet(str(snap))
-        merged = merge_upsert(target, latest, keys, delete_col=delete_col)
-        # materialize BEFORE touching the snapshot dir (the plan reads it)
-        merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(snap, staging, backup, batch_id, _stream_id(batch))
 
-    writer = (
-        changes.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return fold_stream(
+        changes,
+        snapshot_path,
+        latest_changes,
+        lambda snapshot, latest: merge_upsert(snapshot, latest, keys, delete_col=delete_col),
+        checkpoint_dir=checkpoint_dir,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -32,6 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..ops.dedup import content_hash
 from ..ops.sampling import stratified_sample
 from ..ops.text import normalize_text, token_count, with_repetition_cols
+from .sketches import start_checkpointed
 
 __all__ = ["corpus_ingest_transform", "start_corpus_stream"]
 
@@ -105,12 +106,5 @@ def start_corpus_stream(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
     out = corpus_ingest_transform(stream, **transform_kwargs)
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = out.writeStream.format("parquet").option("path", output_dir).outputMode("append")
+    return start_checkpointed(writer, checkpoint_dir, available_now=available_now)

@@ -47,6 +47,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, functions as F
 
 from ..ops.dedup import minhash_band_tags, minhash_signatures
+from .sketches import start_checkpointed
 
 __all__ = ["accumulate_minhash_index_stream"]
 
@@ -64,7 +65,6 @@ def accumulate_minhash_index_stream(
     max_distance: float = 0.4,
     hash_family: str = "xxhash64",
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
 ):
     """Start a stream maintaining the LSH index under ``index_path``
     (``sigs/`` + ``tags/`` parquet tables) and appending candidate pairs
@@ -75,8 +75,8 @@ def accumulate_minhash_index_stream(
     signatures the batch operator uses, so streaming output values are
     identical to ``minhash_candidates`` on the accumulated corpus.
 
-    Returns the StreamingQuery. ``trigger_available_now`` drains pending
-    input then stops; pass False for a continuous stream.
+    Returns the StreamingQuery, which drains the input present at start
+    and then stops.
     """
     root = Path(index_path)
     sigs_dir = root / "sigs"
@@ -164,10 +164,4 @@ def accumulate_minhash_index_stream(
         new_tags.write.mode("overwrite").parquet(f"{tags_dir}/batch={batch_id}")
         new_sigs.write.mode("overwrite").parquet(f"{sigs_dir}/batch={batch_id}")
 
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_checkpointed(docs.writeStream.foreachBatch(process_batch), checkpoint_dir)

@@ -25,6 +25,7 @@ from ..config import IntegrationConfig
 from ..pipeline import load_batch
 from ..sources.archive import archive_file
 from ..sources.readers import FILE_SOURCE_COL, source_schema
+from .sketches import start_checkpointed
 
 
 def ensure_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -88,10 +89,9 @@ def start_file_stream(
             for f in sorted(fc["file"] for fc in report.file_counts):
                 archive_file(spark, f, archive_dir)
 
-    writer = stream.writeStream.foreachBatch(process_batch).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_checkpointed(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir, available_now=available_now
+    )
 
 
 def windowed_event_counts(

@@ -1,5 +1,5 @@
-"""Streaming sketch accumulation: mergeable sketches maintained across
-micro-batches.
+"""Streaming state accumulation: mergeable state maintained across
+micro-batches by one fold-and-swap path.
 
 Greenfield LLM-pipeline capability: corpus-wide statistics (term
 frequencies here, distinct counts by the same pattern) that must stay
@@ -10,6 +10,12 @@ micro-batch's sketch into a persisted cell table and the result is
 EXACTLY the sketch of the full corpus — order-independent, restart-safe
 (checkpointed source offsets + atomic directory swap).
 
+One path: ``fold_stream`` is the whole micro-batch body of every state
+accumulator in this package — the four sketches here (CMS, Bloom, OEE,
+KMV) and ``cdc.apply_cdc_stream``. Each passes only its delta and its
+merge; opening the state, the replay guard, the staging write and the
+swap live here alone.
+
 Replay safety (r7): ``foreachBatch`` is at-least-once — a crash after
 the staging->target swap but BEFORE the checkpoint offset commit
 replays the same ``batch_id`` on restart. Summation merges (CMS cells,
@@ -17,18 +23,18 @@ OEE counts) would double-count that batch, so every accumulator
 persists the last-applied ``batch_id`` in a ``_LAST_BATCH_ID`` marker,
 and the id of the stream that applied it in a ``_STREAM_ID`` marker,
 INSIDE the swapped directory (atomic with the state it describes), and
-makes ``process_batch`` a no-op when the incoming id has already been
-folded by the same stream — mirroring the ``batch=<id>`` overwrite
-idempotence used in ``dedup_index.py``. Batch ids count per checkpoint:
-a stream started on a new checkpoint over existing state begins again at
-batch 0 with new data, and the stream-id check lets it through. Bloom's
-``bit_or`` merge is idempotent anyway; it carries the markers for
-uniformity.
+skips a batch whose id has already been folded by the same stream —
+mirroring the ``batch=<id>`` overwrite idempotence used in
+``dedup_index.py``. Batch ids count per checkpoint: a stream started on
+a new checkpoint over existing state begins again at batch 0 with new
+data, and the stream-id check lets it through. Idempotent merges
+(Bloom's ``bit_or``, KMV's min-merge, CDC's keyed upsert) go through the
+same guard: skipping a replay leaves the state they would have written.
 
-100 TB posture: the persisted state is ``depth * width`` cells — KBs —
-so unlike a CDC snapshot merge (rewrite scales with the snapshot) every
-micro-batch does O(batch) scan work plus an O(sketch) rewrite, forever.
-This is the property that makes sketches the streaming-rollup
+100 TB posture: the persisted sketch state is ``depth * width`` cells —
+KBs — so unlike a CDC snapshot merge (rewrite scales with the snapshot)
+every micro-batch does O(batch) scan work plus an O(sketch) rewrite,
+forever. This is the property that makes sketches the streaming-rollup
 counterpart to exact recounts.
 """
 
@@ -36,8 +42,10 @@ from __future__ import annotations
 
 import shutil
 from pathlib import Path
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..ops.text import countmin_sketch
 
@@ -89,9 +97,7 @@ def _swap_in(target: Path, staging: Path, backup: Path, batch_id: int, stream_id
     """Write the batch-id and stream-id markers into staging, then
     rename-swap staging into place. The markers travel inside the swapped
     directory, so state and last-applied id are atomic: readers (and the
-    replay guard) see either the old state or the new one, never a mix.
-    The one swap of every state directory in this package: the four
-    accumulators here and ``cdc.apply_cdc_stream``."""
+    replay guard) see either the old state or the new one, never a mix."""
     (staging / _MARKER).write_text(str(batch_id))
     (staging / _STREAM_MARKER).write_text(stream_id)
     if backup.exists():
@@ -103,6 +109,52 @@ def _swap_in(target: Path, staging: Path, backup: Path, batch_id: int, stream_id
         shutil.rmtree(backup)
 
 
+def start_checkpointed(
+    writer: DataStreamWriter, checkpoint_dir: str, *, available_now: bool = True
+) -> StreamingQuery:
+    """Start ``writer`` on ``checkpoint_dir`` — the one stream start in this
+    package. ``available_now`` drains the input present at start, then
+    stops; False keeps watching it."""
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def fold_stream(
+    rows: DataFrame,
+    state_path: str,
+    delta: Callable[[DataFrame], Optional[DataFrame]],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    *,
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Start a stream folding every micro-batch of ``rows`` into the
+    parquet state at ``state_path``, draining the input present at start.
+
+    Per batch: skip it if this stream already folded its id; build
+    ``delta(batch)`` (None skips the batch, with no swap); fold it into
+    the live state with ``merge(current, delta)`` — with no state yet the
+    delta is the first state; write the result to staging; swap it in
+    with the batch's markers. The staging write materializes before the
+    live directory is touched, because the merged plan reads it."""
+    target, staging, backup = _open_state(state_path)
+
+    def process_batch(batch: DataFrame, batch_id: int) -> None:
+        stream_id = _stream_id(batch)
+        if _already_applied(target, batch_id, stream_id):
+            return  # at-least-once replay of a batch already folded
+        state = delta(batch)
+        if state is None:
+            return
+        if target.exists():
+            state = merge(batch.sparkSession.read.parquet(str(target)), state)
+        state.write.mode("overwrite").parquet(str(staging))
+        _swap_in(target, staging, backup, batch_id, stream_id)
+
+    return start_checkpointed(rows.writeStream.foreachBatch(process_batch), checkpoint_dir)
+
+
 def accumulate_countmin_stream(
     docs: DataFrame,
     sketch_path: str,
@@ -111,50 +163,25 @@ def accumulate_countmin_stream(
     depth: int = 4,
     width: int = 2048,
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Start a stream folding each micro-batch's Count-Min sketch into
     the parquet cell table at ``sketch_path``.
 
     Each micro-batch: ``countmin_sketch(batch)`` -> union with the
-    persisted (row, col, cnt) table -> one (row, col) sum -> write to
-    staging -> rename-swap (readers see the old or the new sketch,
-    never a partial write). Because CMS merge is cell addition, the
-    accumulated table is bit-identical to the batch sketch of all rows
-    seen so far, however the input was micro-batched — pinned by
-    ``tests/test_streaming.py``.
-
-    Returns the StreamingQuery. ``trigger_available_now`` drains pending
-    input then stops; pass False for a continuous stream.
+    persisted (row, col, cnt) table -> one (row, col) sum. Because CMS
+    merge is cell addition, the accumulated table is bit-identical to
+    the batch sketch of all rows seen so far, however the input was
+    micro-batched — pinned by ``tests/test_streaming.py``.
     """
-    target, staging, backup = _open_state(sketch_path)
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        stream_id = _stream_id(batch)
-        if _already_applied(target, batch_id, stream_id):
-            return  # at-least-once replay of a batch already folded
-        spark = batch.sparkSession
-        delta = countmin_sketch(batch, text_col, depth=depth, width=width)
-        if target.exists():
-            current = spark.read.parquet(str(target))
-            merged = (
-                current.unionByName(delta)
-                .groupBy("row", "col")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = delta
-        # materialize BEFORE touching the live dir (the plan reads it)
-        merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(target, staging, backup, batch_id, stream_id)
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return fold_stream(
+        docs,
+        sketch_path,
+        lambda batch: countmin_sketch(batch, text_col, depth=depth, width=width),
+        lambda current, delta: current.unionByName(delta)
+        .groupBy("row", "col")
+        .agg(F.sum("cnt").alias("cnt")),
+        checkpoint_dir=checkpoint_dir,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def accumulate_bloom_stream(
@@ -166,8 +193,7 @@ def accumulate_bloom_stream(
     k: int = 4,
     salt: int = 0,
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Start a stream folding each micro-batch's Bloom filter
     (``ops.stats.bloom_build``) into the persisted (word_idx, bits)
     table at ``filter_path`` — the membership-index sibling of the
@@ -179,38 +205,19 @@ def accumulate_bloom_stream(
 
     The standing use: a contamination / already-ingested membership
     index that each new crawl batch both probes (``bloom_probe``
-    against the persisted table) and extends — KBs of state forever,
-    the same swap-rename crash discipline as the CMS accumulator.
+    against the persisted table) and extends — KBs of state forever.
     """
     from ..ops.stats import bloom_build
 
-    target, staging, backup = _open_state(filter_path)
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        stream_id = _stream_id(batch)
-        if _already_applied(target, batch_id, stream_id):
-            return  # replay no-op (bit_or is idempotent; skip is cheaper)
-        spark = batch.sparkSession
-        delta = bloom_build(batch, key_col, m_words=m_words, k=k, salt=salt)
-        if target.exists():
-            current = spark.read.parquet(str(target))
-            merged = (
-                current.unionByName(delta)
-                .groupBy("word_idx")
-                .agg(F.bit_or("bits").alias("bits"))
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(target, staging, backup, batch_id, stream_id)
-
-    writer = (
-        keys.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return fold_stream(
+        keys,
+        filter_path,
+        lambda batch: bloom_build(batch, key_col, m_words=m_words, k=k, salt=salt),
+        lambda current, delta: current.unionByName(delta)
+        .groupBy("word_idx")
+        .agg(F.bit_or("bits").alias("bits")),
+        checkpoint_dir=checkpoint_dir,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def accumulate_oee_stream(
@@ -221,8 +228,7 @@ def accumulate_oee_stream(
     type_col: str = "event_type",
     error_type: str = "error",
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Start a stream folding each micro-batch's per-day OEE inputs into
     the persisted (day, n_events, n_errors, hour_bits) table at
     ``state_path`` — the streaming twin of ``ops.inventory.oee_daily``:
@@ -239,7 +245,6 @@ def accumulate_oee_stream(
     ``tests/test_streaming.py``. State is one row per calendar day,
     forever — KBs per year of plant history.
     """
-    target, staging, backup = _open_state(state_path)
 
     def day_delta(batch: DataFrame) -> DataFrame:
         # F.shiftleft takes a LITERAL shift; the column-shift form goes
@@ -264,35 +269,19 @@ def accumulate_oee_stream(
             )
         )
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        stream_id = _stream_id(batch)
-        if _already_applied(target, batch_id, stream_id):
-            return  # at-least-once replay of a batch already folded
-        spark = batch.sparkSession
-        delta = day_delta(batch)
-        if target.exists():
-            current = spark.read.parquet(str(target))
-            merged = (
-                current.unionByName(delta)
-                .groupBy("day")
-                .agg(
-                    F.sum("n_events").cast("bigint").alias("n_events"),
-                    F.sum("n_errors").cast("bigint").alias("n_errors"),
-                    F.bit_or("hour_bits").cast("bigint").alias("hour_bits"),
-                )
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(target, staging, backup, batch_id, stream_id)
-
-    writer = (
-        events.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return fold_stream(
+        events,
+        state_path,
+        day_delta,
+        lambda current, delta: current.unionByName(delta)
+        .groupBy("day")
+        .agg(
+            F.sum("n_events").cast("bigint").alias("n_events"),
+            F.sum("n_errors").cast("bigint").alias("n_errors"),
+            F.bit_or("hour_bits").cast("bigint").alias("hour_bits"),
+        ),
+        checkpoint_dir=checkpoint_dir,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def oee_from_state(spark, state_path: str, *, hours_per_day: int = 24) -> DataFrame:
@@ -345,8 +334,7 @@ def accumulate_kmv_stream(
     key_col: str,
     k: int = 64,
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Start a stream folding each micro-batch's KMV distinct-count
     minima into the parquet hash table at ``sketch_path`` — the
     RANK-SELECTIVE MIN-MERGE accumulator class (4th after q302's
@@ -358,53 +346,28 @@ def accumulate_kmv_stream(
     is IDEMPOTENT under replays and batching-invariant by construction
     (min of mins), so the accumulated table equals
     ``ops.stats.kmv_distinct``'s one-shot minima over all rows seen —
-    however the input was micro-batched. The ``_LAST_BATCH_ID`` marker
-    is kept for uniformity with the module contract (and skips
-    pointless rewrites on replay).
+    however the input was micro-batched.
 
     Each micro-batch does O(batch) scan work plus an O(k) state
     rewrite; the estimate is published from the persisted minima with
     the same ``(k-1)*2^32 div h_k`` integer division as the batch op.
-
-    Returns the StreamingQuery.
     """
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    target, staging, backup = _open_state(sketch_path)
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        stream_id = _stream_id(batch)
-        if _already_applied(target, batch_id, stream_id):
-            return  # min-merge is idempotent; skip the rewrite anyway
-        spark = batch.sparkSession
-        h = F.conv(
-            F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        delta = (
-            batch.filter(F.col(key_col).isNotNull())
-            .select(h.alias("h"))
-            .distinct()
-            .orderBy("h")
-            .limit(k)
-        )
-        if target.exists():
-            current = spark.read.parquet(str(target))
-            merged = (
-                current.unionByName(delta)
-                .distinct()
-                .orderBy("h")
-                .limit(k)
-            )
-        else:
-            merged = delta
-        # materialize BEFORE touching the live dir (the plan reads it)
-        merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(target, staging, backup, batch_id, stream_id)
-
-    writer = (
-        rows.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    h = F.conv(
+        F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
+    ).cast("long")
+    return fold_stream(
+        rows,
+        sketch_path,
+        lambda batch: batch.filter(F.col(key_col).isNotNull())
+        .select(h.alias("h"))
+        .distinct()
+        .orderBy("h")
+        .limit(k),
+        lambda current, delta: current.unionByName(delta)
+        .distinct()
+        .orderBy("h")
+        .limit(k),
+        checkpoint_dir=checkpoint_dir,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

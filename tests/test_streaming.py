@@ -3,6 +3,7 @@
 import shutil
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from manufacturing_data_integration_tool_spark import load_config
@@ -1078,17 +1079,53 @@ def test_streaming_kmv_accumulates_to_batch_minima(spark, tmp_path):
     assert batch["kmv_estimate"] == 7 * (1 << 32) // hk
 
 
-def test_streaming_kmv_replay_is_noop(spark, tmp_path):
+@pytest.mark.parametrize("fold", ["cms", "bloom", "oee", "kmv", "cdc"])
+def test_streaming_kmv_replay_is_noop(spark, tmp_path, monkeypatch, fold):
     """Re-delivering an already-folded batch_id must leave the state
-    untouched (marker short-circuit) — and even without the marker the
-    min-merge is semantically idempotent."""
+    untouched (marker short-circuit), for every accumulator on the fold
+    path — the summation merges (CMS, OEE) would double-count it, and the
+    idempotent ones (Bloom, KMV, CDC) must not rewrite the state either.
+    The replay is real: the checkpoint's last commit is deleted and the
+    stream restarted on it, so Spark re-runs batch 0 with its own id."""
+    import datetime
     import importlib
+
+    from manufacturing_data_integration_tool_spark.streaming.cdc import (
+        apply_cdc_stream,
+    )
 
     sk = importlib.import_module(
         "manufacturing_data_integration_tool_spark.streaming.sketches"
     )
-    target = tmp_path / "kmv_state"
-    base = spark.createDataFrame([(1, 7), (2, 9)], "rid long, key long")
+    target = tmp_path / "state"
+    ckpt = tmp_path / "ck"
+    schema = "doc_id long, text string, ts timestamp, event_type string"
+    t0 = datetime.datetime(2024, 1, 1, 10)
+    base = spark.createDataFrame(
+        [(1, "alpha beta", t0, "ok"), (2, "beta gamma", t0.replace(hour=11), "error")],
+        schema,
+    )
+    if fold == "cdc":
+        spark.createDataFrame([(1, "stale", t0, "ok")], schema).write.parquet(
+            str(target)
+        )
+    start = {
+        "cms": lambda s: sk.accumulate_countmin_stream(
+            s, str(target), depth=4, width=64, checkpoint_dir=str(ckpt)
+        ),
+        "bloom": lambda s: sk.accumulate_bloom_stream(
+            s, str(target), key_col="doc_id", checkpoint_dir=str(ckpt)
+        ),
+        "oee": lambda s: sk.accumulate_oee_stream(
+            s, str(target), checkpoint_dir=str(ckpt)
+        ),
+        "kmv": lambda s: sk.accumulate_kmv_stream(
+            s, str(target), key_col="doc_id", k=4, checkpoint_dir=str(ckpt)
+        ),
+        "cdc": lambda s: apply_cdc_stream(
+            s, str(target), ["doc_id"], checkpoint_dir=str(ckpt)
+        ),
+    }[fold]
 
     calls = []
     orig = sk._swap_in
@@ -1097,40 +1134,35 @@ def test_streaming_kmv_replay_is_noop(spark, tmp_path):
         calls.append(1)
         return orig(*a, **kw)
 
-    sk._swap_in = spy
-    try:
-        src = tmp_path / "in"
-        base.coalesce(1).write.parquet(str(src))
-        stream = (
-            spark.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = sk.accumulate_kmv_stream(
-            stream,
-            str(target),
-            key_col="key",
-            k=4,
-            checkpoint_dir=str(tmp_path / "ck"),
-        )
+    monkeypatch.setattr(sk, "_swap_in", spy)
+    src = tmp_path / "in"
+    base.coalesce(1).write.parquet(str(src))
+
+    def run():
+        q = start(spark.readStream.schema(base.schema).parquet(str(src)))
         q.awaitTermination(120)
         if q.isActive:
             q.stop()
-        n_swaps = len(calls)
-        before = sorted(
-            r["h"] for r in spark.read.parquet(str(target)).collect()
-        )
-        # simulate an at-least-once redelivery of batch 0
-        marker = int((target / sk._MARKER).read_text())
-        stream = (target / sk._STREAM_MARKER).read_text()
-        # re-invoke the guard directly: already-applied id short-circuits
-        assert sk._already_applied(target, marker, stream)
-        assert not sk._already_applied(target, marker + 1, stream)
-        # the same id from another checkpoint's stream is new data
-        assert not sk._already_applied(target, marker, stream + "-other")
-        after = sorted(
-            r["h"] for r in spark.read.parquet(str(target)).collect()
-        )
-        assert before == after and n_swaps >= 1
-    finally:
-        sk._swap_in = orig
+        assert q.exception() is None
+        return q
+
+    def state():
+        return sorted(tuple(r) for r in spark.read.parquet(str(target)).collect())
+
+    run()
+    n_swaps = len(calls)
+    before = state()
+    marker = int((target / sk._MARKER).read_text())
+    stream = (target / sk._STREAM_MARKER).read_text()
+    # re-invoke the guard directly: already-applied id short-circuits
+    assert sk._already_applied(target, marker, stream)
+    assert not sk._already_applied(target, marker + 1, stream)
+    # the same id from another checkpoint's stream is new data
+    assert not sk._already_applied(target, marker, stream + "-other")
+    # the crash: batch 0 swapped in, its commit (and checksum) never written
+    for f in ("0", ".0.crc"):
+        (ckpt / "commits" / f).unlink(missing_ok=True)
+    replayed = run()
+    assert replayed.lastProgress is not None and replayed.lastProgress["batchId"] == 0
+    assert n_swaps == 1 and len(calls) == n_swaps
+    assert state() == before
